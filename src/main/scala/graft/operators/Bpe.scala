@@ -92,20 +92,13 @@ object Bpe {
     * both builds produce identical values (the trainer is
     * deterministic), and with the driver-local production path the
     * duplicated work is sub-second, not a job chain. */
-  private val trainMemo = scala.collection.concurrent.TrieMap
-    .empty[(org.apache.spark.sql.SparkSession, Int, Int, (Int, Long, Int)),
-      (Seq[(Int, String, String, String, Long)], DataFrame)]
-
-  /** Drop memoized BPE training results (multi-corpus drivers). */
-  def clearTrainMemo(): Unit = trainMemo.clear()
-
   private def train(docs: DataFrame, rounds: Int)
       : (Seq[(Int, String, String, String, Long)], DataFrame) = {
     val (minFreq, maxV) = pruneConfs(docs.sparkSession)
     // the memo keys on the prune confs too — flipping
     // spark.graft.bpe.* mid-session must retrain, not serve the old
     // tokenizer
-    Dedup.corpusMemo(trainMemo, docs, (rounds, minFreq, maxV))(
+    graft.tools.Memos.get("bpeTrain", docs, (rounds, minFreq, maxV))(
       trainedArtifact(docs, rounds))(trainRelational(docs, rounds))
   }
 

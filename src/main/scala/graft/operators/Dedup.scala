@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.functions.{Hashing, IntersectCountSorted, TextFns}
+import graft.tools.Memos
 
 /** Deduplication operators over the `documents` corpus — the first of
   * the LLM-training-data-pipeline extensions (SURVEY §2.B last row).
@@ -87,19 +88,9 @@ object Dedup {
     * family (q111/q112/q132/q185) all consume the SAME relation. A
     * production pipeline materializes its candidate-pair table once
     * and fans analyses out from it; building it once per downstream
-    * query was 7 identical O(cap²) pair stages per session. Keyed by
-    * (session, plan semanticHash, file-state fingerprint, cap,
-    * threshold) — a same-path corpus rewrite or a different bound can
-    * never serve stale pairs. Lazy (plan-audit) mode bypasses the memo
-    * so audited plans keep the full pair tower. */
-  private val pairMemo = scala.collection.concurrent.TrieMap
-    .empty[(org.apache.spark.sql.SparkSession, Int, Int, (Long, Double)), DataFrame]
-
-  /** Drop memoized pair relations (multi-corpus drivers). */
-  def clearPairMemo(): Unit = pairMemo.clear()
-
+    * query was 7 identical O(cap²) pair stages per session. */
   def nearDupPairsShared(docs: DataFrame, cap: Long, threshold: Double): DataFrame =
-    corpusMemo(pairMemo, docs, (cap, threshold))(
+    Memos.get("pairs", docs, (cap, threshold))(
       nearDupJaccard(docs, cap, threshold).localCheckpoint(true))(
       nearDupJaccard(docs, cap, threshold))
 
@@ -462,24 +453,15 @@ object Dedup {
     * optimization): six consumers start from `minhashNearDup(docs, t)`
     * — q22 itself, q146's recall audit, q202's incremental clustering,
     * q251's source matrix, q259's split-leakage audit, and the q58
-    * clusterMemo build — and before this memo each rebuilt the band
+    * cluster-tower build — and before this memo each rebuilt the band
     * self-join + exact-verify tower per call (the fused sketch was
     * shared; the candidate join and the per-pair sorted-set intersect
     * were not). A production pipeline materializes its verified pair
     * table once (the SketchStore probe output) and fans analyses out
     * from it. The leaf is the ordered (doc_a, doc_b, jaccard) result —
-    * strictly smaller than the corpus. Keyed like every corpus memo
-    * (session, plan semanticHash, file-state fingerprint) plus the
-    * threshold in micros; lazy (plan-audit) mode bypasses so Explain
-    * keeps the full tower. */
-  private val verifiedPairsMemo = scala.collection.concurrent.TrieMap
-    .empty[(org.apache.spark.sql.SparkSession, Int, Int, Long), DataFrame]
-
-  /** Drop memoized verified-pair relations (multi-corpus drivers). */
-  def clearVerifiedPairsMemo(): Unit = verifiedPairsMemo.clear()
-
+    * strictly smaller than the corpus. */
   def minhashNearDup(docs: DataFrame, threshold: Double): DataFrame =
-    corpusMemo(verifiedPairsMemo, docs, math.round(threshold * 1e6))(
+    Memos.get("verifiedPairs", docs, math.round(threshold * 1e6))(
       minhashNearDupBuild(docs, threshold))(
       minhashNearDupBuild(docs, threshold))
 
@@ -771,7 +753,7 @@ object Dedup {
     val result = calibrationScored(docs) { scored =>
       // TWO consumers (the threshold derivation and the final fold):
       // since round 13 `scored` is itself the memoized NARROW
-      // checkpoint leaf (calibMemo — the round-12 per-call checkpoint
+      // checkpoint leaf (the calib tower — the round-12 per-call checkpoint
       // that fixed the flagged 2.26 → 4.08 s band-join replay is
       // superseded by it), so both branches read the leaf directly
       val s = scored
@@ -1052,24 +1034,17 @@ object Dedup {
     * leaf keeps exactly the columns the folds consume (doc_a, doc_b,
     * n_a, n_b, est_micros, jac_micros) — NOT the token sets, so the
     * checkpoint is six longs per candidate pair. Artifact-backed
-    * across JVMs like the sketch/signature towers; lazy (plan-audit)
-    * mode bypasses so Explain keeps the full tower. */
-  private val calibMemo = scala.collection.concurrent.TrieMap
-    .empty[(org.apache.spark.sql.SparkSession, Int, Int, Unit), DataFrame]
-
-  /** Drop the memoized calibration-scored relation (multi-corpus
-    * drivers). */
-  def clearCalibMemo(): Unit = calibMemo.clear()
-
-  /** The q271/q274/q281 shared candidate-scoring tower: LSH candidates
+    * across JVMs like the sketch/signature towers.
+    *
+    * The q271/q274/q281 shared candidate-scoring tower: LSH candidates
     * off the memoized fused sketch, per-pair signature agreement +
     * exact Jaccard in integer micros; `fold` shapes the final
     * aggregation over the memoized narrow leaf. */
   private def calibrationScored(docs: DataFrame)(
       fold: DataFrame => DataFrame): DataFrame = {
     val (agged, handles) = fusedSketch(docs)
-    val scored = corpusMemo(calibMemo, docs, ())(
-      checkpointWide(graft.sources.ArtifactStore
+    val scored = Memos.get("calib", docs, ())(
+      Memos.checkpointWide(graft.sources.ArtifactStore
         // params "inter": round 14 adds the exact intersect count to
         // the leaf (q266/q267 derive containment from it) — a new
         // artifact key, so a pre-round artifact with the narrower
@@ -1089,8 +1064,8 @@ object Dedup {
       "scoredCandidatesLeaf is eager-mode only — lazy (plan-audit) " +
         "callers keep their own full tower")
     val (agged, _) = fusedSketch(docs)
-    corpusMemo(calibMemo, docs, ())(
-      checkpointWide(graft.sources.ArtifactStore
+    Memos.get("calib", docs, ())(
+      Memos.checkpointWide(graft.sources.ArtifactStore
         .loadOrBuild("calib_scored", docs, "inter")(calibScoredPlan(agged))))(
       calibScoredPlan(agged))
   }
@@ -1169,19 +1144,11 @@ object Dedup {
     * q146's recall audit, and the incremental probes all start from the
     * SAME per-document signature relation, and a 100 TB pipeline
     * builds its sketch index ONCE (`SketchStore`) rather than once per
-    * downstream query. Keyed by (session, plan semanticHash,
-    * file-state fingerprint) so a same-path corpus rewrite can never
-    * serve stale sketches; entries are one-row-per-doc localCheckpoint
-    * leaves, reclaimed at session end or via [[clearSketchMemo]].
+    * downstream query. Entries are one-row-per-doc checkpoint leaves.
     * Each query still pays its OWN band-join + verify (only the build
-    * is shared — the SketchStore.save ≙ probe split, in-session). */
-  private val sketchMemo = scala.collection.concurrent.TrieMap
-    .empty[(org.apache.spark.sql.SparkSession, Int, Int, Unit), DataFrame]
-
-  /** Drop memoized sketch relations (multi-corpus drivers). */
-  def clearSketchMemo(): Unit = sketchMemo.clear()
-
-  /** The fused relation plus the persist handles the CALLER must
+    * is shared — the SketchStore.save ≙ probe split, in-session).
+    *
+    * Returns the fused relation plus the persist handles the CALLER must
     * release via [[finishWith]]: eager mode memoizes a checkpoint LEAF
     * (nothing to release); lazy (plan-audit) mode keeps the full tower
     * persisted so Explain sees it (released by the audit driver). */
@@ -1191,8 +1158,8 @@ object Dedup {
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       (p, Seq(p))
     } else
-      (corpusMemo(sketchMemo, docs, ())(
-        checkpointWide(graft.sources.ArtifactStore
+      (Memos.get("sketch", docs, ())(
+        Memos.checkpointWide(graft.sources.ArtifactStore
           .loadOrBuild("minhash_sketch", docs, "")(fusedSketchPlan(docs))))(
         // unreachable: the outer branch already took the lazy path;
         // fail loudly if that guard is ever removed, because the lazy
@@ -1289,17 +1256,9 @@ object Dedup {
     * optimization: q90's audit row, q269's keeper upgrades, and q275's
     * merge-pending staleness all probe the SAME (cap, threshold)
     * new×old match relation; each was re-paying the band probe +
-    * exact verify per call. Keyed like every corpus memo plus (cap,
-    * threshold-micros); lazy mode keeps the full tower. */
-  private val incrementalPairsMemo = scala.collection.concurrent.TrieMap
-    .empty[(org.apache.spark.sql.SparkSession, Int, Int, (Long, Long)),
-      DataFrame]
-
-  /** Drop memoized incremental-probe matches (multi-corpus drivers). */
-  def clearIncrementalPairsMemo(): Unit = incrementalPairsMemo.clear()
-
+    * exact verify per call. */
   def incrementalNearDup(docs: DataFrame, cap: Long, threshold: Double): DataFrame =
-    corpusMemo(incrementalPairsMemo, docs, (cap, math.round(threshold * 1e6)))(
+    Memos.get("incrementalPairs", docs, (cap, math.round(threshold * 1e6)))(
       incrementalNearDupBuild(docs, cap, threshold))(
       incrementalNearDupBuild(docs, cap, threshold))
 
@@ -1387,25 +1346,19 @@ object Dedup {
     * verify step removes all false positives, so every edge here is a
     * true near-dup edge: the resulting clustering is a REFINEMENT of
     * the exact one (components may split where LSH misses an edge,
-    * never merge wrongly) — pinned by spec. */
+    * never merge wrongly) — pinned by spec.
+    *
+    * Session tower: the CC loop is the suite's most expensive stage,
+    * and two consumers read its output (q58's contract relation, q233's
+    * savings report) — one loop per (corpus, threshold). Labels are
+    * corpus-ROW-sized (three narrow columns). */
   def dedupClustersScale(docs: DataFrame, threshold: Double): DataFrame =
-    corpusMemo(clusterMemo, docs, math.round(threshold * 1e6))(
+    Memos.get("clusters", docs, math.round(threshold * 1e6))(
       clusterLabels(docs.select("doc_id"),
         minhashNearDup(docs, threshold).select("doc_a", "doc_b"))
         .localCheckpoint(true))(
       clusterLabels(docs.select("doc_id"),
         minhashNearDup(docs, threshold).select("doc_a", "doc_b")))
-
-  /** Session memo for the SCALE-PATH cluster labels: the CC loop is
-    * the suite's most expensive stage, and two consumers now read its
-    * output (q58's contract relation, q233's savings report) — one
-    * loop per (corpus, threshold), the sketch-memo discipline. Labels
-    * are corpus-ROW-sized (three narrow columns), far under the memo
-    * family's existing leaves. */
-  private val clusterMemo = scala.collection.concurrent.TrieMap
-    .empty[(org.apache.spark.sql.SparkSession, Int, Int, Long), DataFrame]
-
-  def clearClusterMemo(): Unit = clusterMemo.clear()
 
   /** q233 — the dedup SAVINGS REPORT: what running the q58 decision
     * would actually delete, as a bounded per-cluster-size relation —
@@ -2028,16 +1981,9 @@ object Dedup {
     * READ from the committed LabelStore table (the whole point of the
     * incremental path; STOREBENCH prices it), so rebuilding it once
     * per (corpus, cap, threshold) per session instead of once per
-    * call is the clusterMemo discipline applied to the in-query
+    * call is the cluster-tower discipline applied to the in-query
     * oracle-convention cost. The leaf is labels over the stored
     * slice — corpus-row-sized, two longs. */
-  private val storedLabelsMemo = scala.collection.concurrent.TrieMap
-    .empty[(org.apache.spark.sql.SparkSession, Int, Int, (Long, Long)),
-      DataFrame]
-
-  /** Drop memoized stand-in stored labels (multi-corpus drivers). */
-  def clearStoredLabelsMemo(): Unit = storedLabelsMemo.clear()
-
   private def storedLabelsShared(docs: DataFrame, cap: Long,
       threshold: Double): DataFrame = {
     def plan = clusterLabels(
@@ -2045,7 +1991,7 @@ object Dedup {
       minhashNearDup(docs, threshold).select("doc_a", "doc_b")
         .where(col("doc_a") < cap && col("doc_b") < cap))
       .select("doc_id", "cluster_id")
-    corpusMemo(storedLabelsMemo, docs, (cap, math.round(threshold * 1e6)))(
+    Memos.get("storedLabels", docs, (cap, math.round(threshold * 1e6)))(
       plan.localCheckpoint(true))(plan)
   }
 
@@ -2054,17 +2000,10 @@ object Dedup {
     * input, so each call was re-running the contracted-subgraph CC
     * loop (a handful of checkpointed driver-floor jobs) on identical
     * inputs. One merge per (corpus, cap, threshold) per session — the
-    * storedLabelsMemo discipline applied one composition higher. In
+    * stored-labels discipline applied one composition higher. In
     * production this relation is the LabelStore table the daily cycle
     * COMMITS (STOREBENCH prices that path); the in-query rebuild is
     * the oracle convention's cost. */
-  private val mergedLabelsMemo = scala.collection.concurrent.TrieMap
-    .empty[(org.apache.spark.sql.SparkSession, Int, Int, (Long, Long)),
-      DataFrame]
-
-  /** Drop memoized merged label relations (multi-corpus drivers). */
-  def clearMergedLabelsMemo(): Unit = mergedLabelsMemo.clear()
-
   private def mergedLabelsShared(docs: DataFrame, cap: Long,
       threshold: Double): DataFrame = {
     def plan = {
@@ -2074,7 +2013,7 @@ object Dedup {
       mergeClusterLabels(stored,
         docs.where(col("doc_id") >= cap).select("doc_id"), delta)
     }
-    corpusMemo(mergedLabelsMemo, docs, (cap, math.round(threshold * 1e6)))(
+    Memos.get("mergedLabels", docs, (cap, math.round(threshold * 1e6)))(
       plan.localCheckpoint(true))(plan)
   }
 
@@ -2095,76 +2034,15 @@ object Dedup {
     * the 64-bit twins) all start from the same per-document signature
     * aggregation, built once per (corpus fingerprint, width) the way a
     * production pipeline persists its q23 export. Entries are
-    * one-row-per-doc checkpoint leaves; lazy (plan-audit) mode
-    * bypasses so Explain keeps the full tower. */
-  private val sigMemo = scala.collection.concurrent.TrieMap
-    .empty[(org.apache.spark.sql.SparkSession, Int, Int, (Int, Int)), DataFrame]
-
-  /** Drop memoized signature relations (multi-corpus drivers). */
-  def clearSigMemo(): Unit = sigMemo.clear()
-
+    * one-row-per-doc checkpoint leaves. */
   private def memoizedSigs(docs: DataFrame, bits: Int, th: Column): DataFrame =
     // the token-hash expression is part of the signature definition —
     // keep polyHash/xxhash64 entries distinct even at equal widths
-    corpusMemo(sigMemo, docs, (bits, th.toString.hashCode))(
-      checkpointWide(graft.sources.ArtifactStore
+    Memos.get("sigs", docs, (bits, th.toString.hashCode))(
+      Memos.checkpointWide(graft.sources.ArtifactStore
         .loadOrBuild("simhash_sigs", docs, s"$bits-${th.toString.hashCode}")(
           simhashSigsWide(docs, bits, th))))(
       simhashSigsWide(docs, bits, th))
-
-  /** Entries for STOPPED sessions pin checkpointed DataFrames for the
-    * process lifetime — drop them on each memo access (a long-lived
-    * driver looping create-session → work → stop otherwise leaks). */
-  private[operators] def evictStopped[K, V](memo: scala.collection.concurrent.TrieMap[K, V])(
-      session: K => org.apache.spark.sql.SparkSession): Unit =
-    memo.keys.filter(k => session(k).sparkContext.isStopped)
-      .foreach(memo.remove)
-
-  /** The ONE corpus-memo discipline every artifact cache shares
-    * (sketches, signatures, pairs, winnow prints, BPE training):
-    * bypass in lazy (plan-audit) mode so Explain keeps the full
-    * tower, evict stopped sessions, key by (session, plan
-    * semanticHash, file-state fingerprint, params) so a same-path
-    * corpus rewrite or different parameters can never serve a stale
-    * artifact. */
-  private[operators] def corpusMemo[P, V](
-      memo: scala.collection.concurrent.TrieMap[
-        (org.apache.spark.sql.SparkSession, Int, Int, P), V],
-      docs: DataFrame, params: P)(build: => V)(lazyBuild: => V): V =
-    if (!eagerMaterialize(docs)) lazyBuild
-    else {
-      evictStopped(memo)(_._1)
-      memo.getOrElseUpdate(
-        (docs.sparkSession, docs.queryExecution.analyzed.semanticHash(),
-          Similarity.fileStateHash(docs), params), build)
-    }
-
-  /** Non-building lookup under the [[corpusMemo]] key discipline: Some
-    * only when another consumer has ALREADY built this leaf in this
-    * session (always None in lazy/plan-audit mode). For first-consumer
-    * fast paths — an operator that can answer from a cheaper one-pass
-    * plan when the shared leaf doesn't exist, but should fold the leaf
-    * rather than re-scan the corpus when it does. */
-  private[operators] def corpusMemoPeek[P, V](
-      memo: scala.collection.concurrent.TrieMap[
-        (org.apache.spark.sql.SparkSession, Int, Int, P), V],
-      docs: DataFrame, params: P): Option[V] =
-    if (!eagerMaterialize(docs)) None
-    else memo.get(
-      (docs.sparkSession, docs.queryExecution.analyzed.semanticHash(),
-        Similarity.fileStateHash(docs), params))
-
-  /** Checkpoint a memo leaf at FULL session parallelism. AQE coalesces
-    * the small build shuffle to ~1 partition, and the leaf's accurate
-    * (tiny) stats then let consumers plan BROADCAST joins with no
-    * exchange anywhere — so a heavy downstream stage (q91's 3M-pair
-    * Hamming verify) would inherit the leaf's single partition and run
-    * single-threaded (measured: q91 2.6 → 5.1 s before this).
-    * An explicit width-N repartition at build time is one extra tiny
-    * shuffle, paid once per corpus. */
-  private[operators] def checkpointWide(df: DataFrame): DataFrame =
-    df.repartition(df.sparkSession.sessionState.conf.numShufflePartitions)
-      .localCheckpoint(true)
 
   /** The (doc_id, simhash) relation WITHOUT the presentation sort —
     * the form the matching operators consume (an orderBy in the

@@ -1009,18 +1009,6 @@ object Events {
     graft.operators.Dedup.finishWith(result, handles: _*)
   }
 
-  /** Session memo for the q243/q253 anchor relation — both queries
-    * read the same user-window session assignment and the same
-    * three-step anchor chain, so a suite run must pay that pass ONCE
-    * per (corpus, gap), not once per consumer (the sketch-memo
-    * discipline). The memoized leaf is session-population-sized
-    * (five narrow columns), far under the memo budget. */
-  private val anchorMemo = scala.collection.concurrent.TrieMap
-    .empty[(org.apache.spark.sql.SparkSession, Int, Int, Long), DataFrame]
-
-  /** Drop memoized funnel-anchor relations (multi-corpus drivers). */
-  def clearAnchorMemo(): Unit = anchorMemo.clear()
-
   /** The chain shared by q243 (funnelConversion) and q253
     * (conversionLatency): per gap-session, the min-anchored step
     * timestamps — t1 = first view, t2 = first click strictly after
@@ -1031,7 +1019,10 @@ object Events {
     * PlanSweep measured 7 scans / 14 windows in the unpersisted
     * form). Returns the anchor relation plus any persist handles the
     * caller must release via finishWith (lazy/plan-audit mode only;
-    * the eager path checkpoints the memo leaf and releases its own). */
+    * the eager path checkpoints the memo leaf and releases its own).
+    * The leaf is a session tower, so a suite run pays the pass ONCE
+    * per (corpus, gap), not once per consumer; it is
+    * session-population-sized (five narrow columns). */
   private def funnelAnchors(events: DataFrame,
       gap: java.time.Duration): (DataFrame, Seq[DataFrame]) = {
     def build(): (DataFrame, DataFrame) = {
@@ -1056,8 +1047,7 @@ object Events {
       (anchors, sess)
     }
     var handles: Seq[DataFrame] = Seq.empty
-    val anchors = graft.operators.Dedup.corpusMemo(
-      anchorMemo, events, gap.toMillis)({
+    val anchors = graft.tools.Memos.get("anchors", events, gap.toMillis)({
       val (a, sess) = build()
       try a.localCheckpoint(true) finally sess.unpersist()
     })({

@@ -367,25 +367,17 @@ object InvertedIndex {
     * tower (tokenize + fused dl/tf aggregation + df join) builds once
     * per session and each consumer pays only its own TakeOrdered.
     * Lazy (plan-audit) mode keeps the per-call tower. */
-  private val bm25Memo = scala.collection.concurrent.TrieMap
-    .empty[(org.apache.spark.sql.SparkSession, Int, Int,
-      (Seq[String], Long, Long)), DataFrame]
-
-  /** Drop memoized BM25 score relations (multi-corpus drivers). */
-  def clearBm25Memo(): Unit = bm25Memo.clear()
-
   def bm25Search(docs: DataFrame, rawTerms: Seq[String], topK: Int,
       k1: Double = 1.2, b: Double = 0.75): DataFrame =
-    // keyed on the term LIST itself (r14 ADVICE): a joined-string key
-    // needs a delimiter no term can contain; the list key removes the
-    // class of collision outright (and the literal NUL byte the interim
-    // fix put in this source file). Growth bound, documented (r14
-    // ADVICE): each distinct (terms, k1, b) pins one corpus-row-sized
+    // keyed on the term SET as a sorted list: a joined-string key
+    // needs a delimiter no term can contain, and scores do not depend
+    // on term order, so a permuted query hits the same tower. Growth
+    // bound: each distinct (terms, k1, b) pins one corpus-row-sized
     // leaf for the session - a long-lived driver serving an UNBOUNDED
-    // ad-hoc query stream must call clearBm25Memo periodically (the
+    // ad-hoc query stream must call Memos.clearAll periodically (the
     // suite's workload is two fixed queries).
-    Dedup.corpusMemo(bm25Memo, docs,
-      (rawTerms.distinct,
+    graft.tools.Memos.get("bm25", docs,
+      (rawTerms.distinct.sorted,
         math.round(k1 * 1e6), math.round(b * 1e6)))(
       bm25DocScores(docs, rawTerms, k1, b).localCheckpoint(true))(
       bm25DocScores(docs, rawTerms, k1, b))

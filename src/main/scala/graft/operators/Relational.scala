@@ -1753,6 +1753,9 @@ object Relational {
     * genuinely frequent pairs. */
   def basketPairs(lineitem: DataFrame, minSupport: Long = 3L,
       maxBasket: Int = 64): DataFrame = {
+    // a capped basket must still hold a pair: below 2 the combination
+    // expansion would index element 0
+    require(maxBasket >= 2, s"maxBasket must be at least 2, got $maxBasket")
     import org.apache.spark.sql.expressions.Window
     // several consumers (support, sizes, both prune branches, basket
     // count) read the distinct relation: persist once

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.functions.{DotProductDouble, Hashing}
+import graft.tools.Memos
 
 /** Similarity search over the `embeddings` table (ARRAY<FLOAT>, dim 64)
   * — LLM-pipeline extension (SURVEY §2.B last row).
@@ -203,30 +204,18 @@ object Similarity {
     * restricting the full scored relation by endpoint cap reproduces
     * EXACTLY the separate old-corpus and delta passes — restriction ≡
     * separate passes, re-verified by the shared oracle's hash gate.
-    * Checkpointed WIDE (explicit repartition to session parallelism)
-    * for the same reason as Dedup's memo leaves: AQE coalesces the
+    * Checkpointed WIDE ([[Memos.checkpointWide]]): AQE coalesces the
     * small build to ~1 partition and every downstream window/join
-    * would inherit it. Lazy plan-audit mode bypasses the memo so
-    * audited plans keep the full candidate tower. */
-  private val nswScoredMemo = scala.collection.concurrent.TrieMap
-    .empty[(org.apache.spark.sql.SparkSession, Int, Int, Int), DataFrame]
-
-  /** Drop memoized scored-candidate relations (multi-corpus drivers,
-    * artifact-store tests). */
-  def clearNswScoredMemo(): Unit = nswScoredMemo.clear()
-
-
+    * would inherit it. */
   private def nswScoredAll(embeddings: DataFrame, longLinks: Int): DataFrame = {
     def fresh = nswScore(withNorm(embeddings),
       nswCandidates(embeddings, longLinks, None))
     // artifact-backed like every memo family (sketches, sigs, prints,
     // PQ, BPE): with spark.graft.artifactDir set, a RESTARTED session
     // loads the scored relation instead of re-scoring the corpus
-    Dedup.corpusMemo(nswScoredMemo, embeddings, longLinks)(
-      graft.sources.ArtifactStore.loadOrBuild(
-          "nsw_scored", embeddings, s"ll$longLinks")(fresh)
-        .repartition(embeddings.sparkSession.sessionState.conf
-          .numShufflePartitions).localCheckpoint(true))(fresh)
+    Memos.get("nswScored", embeddings, longLinks)(
+      Memos.checkpointWide(graft.sources.ArtifactStore.loadOrBuild(
+          "nsw_scored", embeddings, s"ll$longLinks")(fresh)))(fresh)
   }
 
   /** The scored top-m base graph — the artifact the incremental path
@@ -299,7 +288,7 @@ object Similarity {
     // the in-query form computes the stored side as a stand-in (the
     // q202 oracle convention), so BOTH halves come from the ONE
     // memoized full-corpus scored pass, split by the cap (restriction
-    // ≡ separate passes — see nswScoredMemo): old base = pairs with
+    // ≡ separate passes — see nswScoredAll): old base = pairs with
     // both endpoints old; delta = pairs with ≥1 new endpoint. The
     // PRODUCTION path (GraphStore.update → nswMergeBase) never builds
     // the old side — it reads the stored base and scores delta only.
@@ -749,17 +738,11 @@ object Similarity {
     * q102's trained-IVF probe all train the SAME `iters`-round Lloyd
     * codebook over the same corpus (q43/q93/q107 share the iters=0
     * seed the same way) — one training per (corpus, iters, numCents),
-    * the trainedPq/pcaMemo discipline. The leaf is numCents rows.
+    * the trained-PQ/PCA discipline. The leaf is numCents rows.
     * Lazy (plan-audit) mode keeps the in-query training tower. */
-  private val centsMemo = scala.collection.concurrent.TrieMap
-    .empty[(org.apache.spark.sql.SparkSession, Int, Int, (Int, Int)), DataFrame]
-
-  /** Drop memoized codebooks (multi-corpus drivers). */
-  def clearCentsMemo(): Unit = centsMemo.clear()
-
   private def trainedCents(embeddings: DataFrame, iters: Int,
       numCents: Int): DataFrame =
-    Dedup.corpusMemo(centsMemo, embeddings, (iters, numCents))({
+    Memos.get("cents", embeddings, (iters, numCents))({
       val e = withNorm(embeddings)
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       try trainCents(e, iters, numCents).localCheckpoint(true)
@@ -772,18 +755,12 @@ object Similarity {
     * same assignCells pass (q92 projects, q270 counts); the vectors
     * themselves are deliberately NOT in the leaf (consumers that need
     * them — q93's edge scoring — keep their own assignment). */
-  private val assignMemo = scala.collection.concurrent.TrieMap
-    .empty[(org.apache.spark.sql.SparkSession, Int, Int, (Int, Int)), DataFrame]
-
-  /** Drop memoized assignment relations (multi-corpus drivers). */
-  def clearAssignMemo(): Unit = assignMemo.clear()
-
   private def assignedCellsShared(embeddings: DataFrame, iters: Int,
       numCents: Int): DataFrame =
-    Dedup.corpusMemo(assignMemo, embeddings, (iters, numCents))({
+    Memos.get("assign", embeddings, (iters, numCents))({
       val e = withNorm(embeddings)
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      try Dedup.checkpointWide(
+      try Memos.checkpointWide(
         assignCells(e, trainedCents(embeddings, iters, numCents))
           .select(col("vec_id"), col("cell"), col("ccos6")))
       finally { e.unpersist(); () }
@@ -937,13 +914,6 @@ object Similarity {
       .orderBy("pos")
   }
 
-  private val pcaMemo = scala.collection.concurrent.TrieMap
-    .empty[(org.apache.spark.sql.SparkSession, Int, Int, Int),
-      (Seq[Long], Long)]
-
-  /** Drop memoized PCA components (multi-corpus drivers). */
-  def clearPcaMemo(): Unit = pcaMemo.clear()
-
   /** The trained component as driver values — the d-bounded artifact
     * three queries consume (q211 renders it, q212 projects with it,
     * q216 bins on the projection). Session-memoized per (corpus plan,
@@ -953,7 +923,7 @@ object Similarity {
     * driver with the store enabled. */
   private[graft] def pcaTrained(embeddings: DataFrame,
       rounds: Int): (Seq[Long], Long) =
-    Dedup.corpusMemo(pcaMemo, embeddings, rounds)(
+    Memos.get("pca", embeddings, rounds)(
       pcaTrainedArtifact(embeddings, rounds))(
       pcaComputeTrained(embeddings, rounds))
 
@@ -1431,32 +1401,6 @@ object Similarity {
       .orderBy("vec_a", "rnk", "vec_b")
   }
 
-  /** Session-scoped trained-PQ cache: (session, canonical input plan,
-    * params) → eagerly-checkpointed (codebook, codes). A PQ index is
-    * trained ONCE and probed many times — that is the entire economics
-    * of PQ — so the flat-ADC query (q106) and IVFADC (q107) sharing
-    * one Lloyd chain per session is the semantics a serving engine
-    * has, not a bench trick; the r5 suite paid the same ~5 s training
-    * twice per pass. Training is deterministic (the repo-wide
-    * discipline), so memo reuse is result-invariant — PqSpec pins
-    * single-training reuse and result equality. Keyed by
-    * `semanticHash` of the analyzed input plan: two `spark.read`s of
-    * the same parquet path canonicalize equal, so q106/q107 hit the
-    * same entry without sharing DataFrame instances. */
-  private val trainedPq = scala.collection.concurrent.TrieMap
-    .empty[(org.apache.spark.sql.SparkSession, Int, Int, Int, Int, Int, Int),
-      (DataFrame, DataFrame)]
-
-  private[graft] def trainedPqSize: Int = trainedPq.size
-
-  /** Drop every memoized PQ codebook. The memo is keyed by (session,
-    * semantic plan, FILE STATE, params) — a rewrite of the underlying
-    * parquet read through a NEW `spark.read` changes the file-state
-    * component and retrains automatically — but entries for stopped
-    * sessions are only reclaimed here, so long-lived multi-session
-    * drivers should call this between corpora. */
-  def clearTrainedPq(): Unit = trainedPq.clear()
-
   /** A fingerprint of the scanned files' (path, length, mtime) — the
     * data-version component of the PQ memo key: the file INDEX hashes
     * by root path alone, so without this a same-path rewrite would
@@ -1477,19 +1421,27 @@ object Similarity {
     }.hashCode()
 
   /** Train-or-reuse + decode; returns the recon frame and the
-    * persisted handles for the caller to release (empty on the memo
+    * persisted handles for the caller to release (empty on the tower
     * path — checkpointed leaves need no release). Lazy plan-audit mode
-    * bypasses the memo entirely so audited plans keep the full
-    * training tower (a checkpoint scan leaf would hide it). */
+    * keeps the full training tower (a checkpoint scan leaf would hide
+    * it).
+    *
+    * The trained (codebook, codes) pair is a session tower. A PQ index
+    * is trained ONCE and probed many times — that is the entire
+    * economics of PQ — so the flat-ADC query (q106) and IVFADC (q107)
+    * sharing one Lloyd chain per session is the semantics a serving
+    * engine has, not a bench trick; the r5 suite paid the same ~5 s
+    * training twice per pass. Training is deterministic, so reuse is
+    * result-invariant — PqSpec pins single-training reuse and result
+    * equality. */
   private def pqRecon(u: DataFrame, numSubs: Int, subDim: Int, ksub: Int,
       iters: Int): (DataFrame, Seq[DataFrame]) =
     if (!Dedup.eagerMaterialize(u)) {
       val (cents, codes, subs) = pqTrain(u, numSubs, subDim, ksub, iters)
       (pqDecode(codes, cents), Seq(subs, cents))
     } else {
-      val key = (u.sparkSession, u.queryExecution.analyzed.semanticHash(),
-        fileStateHash(u), numSubs, subDim, ksub, iters)
-      val (cents, codes) = trainedPq.getOrElseUpdate(key, {
+      val (cents, codes) = Memos.get("trainedPq", u,
+          (numSubs, subDim, ksub, iters)) {
         // artifact-backed (ArtifactStore): with spark.graft.artifactDir
         // set, a restarted driver loads the trained codebook + codes
         // instead of re-running Lloyd; intermediates persist only on
@@ -1504,7 +1456,7 @@ object Similarity {
           }
           (cDf.localCheckpoint(true), cdDf.localCheckpoint(true))
         } finally release()
-      })
+      }(sys.error("unreachable: lazy mode trains above"))
       (pqDecode(codes, cents), Nil)
     }
 

@@ -4,6 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.functions.TextFns
+import graft.tools.Memos
 
 /** Corpus-level text analysis over `documents` — LLM-pipeline extension
   * (SURVEY §2.B last row). */
@@ -113,15 +114,8 @@ object TextAnalysis {
     * and q241's keyword extraction both start from this exact
     * aggregation (their df/N towers are aggregates OF it), and each
     * was re-running the corpus tokenize + (doc, word) count per call.
-    * Built once per corpus, the fusedSketch/bigram-memo discipline;
+    * Built once per corpus, the fusedSketch/bigram-tower discipline;
     * lazy (plan-audit) mode keeps the per-call tower. */
-  private val tfMemo = scala.collection.concurrent.TrieMap
-    .empty[(org.apache.spark.sql.SparkSession, Int, Int, Unit), DataFrame]
-
-  /** Drop the memoized term-frequency relations (multi-corpus
-    * drivers). */
-  def clearTfMemo(): Unit = tfMemo.clear()
-
   private[operators] def docTermFreq(docs: DataFrame): (DataFrame, Seq[DataFrame]) = {
     def plan = TextFns.tokens(docs).groupBy("doc_id", "word")
       .agg(count(lit(1)).as("tf"))
@@ -129,7 +123,7 @@ object TextAnalysis {
       val p = plan.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       (p, Seq(p))
     } else
-      (Dedup.corpusMemo(tfMemo, docs, ())(checkpointWideTA(plan))(
+      (Memos.get("tf", docs, ())(Memos.checkpointWide(plan))(
         sys.error("docTermFreq lazy path must persist and return handles")),
         Nil)
   }
@@ -157,7 +151,7 @@ object TextAnalysis {
     * not worth a checkpoint of their own. A capped frame's semanticHash
     * differs from the corpus frame's, so a peek on it simply misses. */
   private[operators] def docWordsLeafPeek(docs: DataFrame): Option[DataFrame] =
-    Dedup.corpusMemoPeek(tfMemo, docs, ()).map(_.select("doc_id", "word"))
+    Memos.peek[DataFrame]("tf", docs, ()).map(_.select("doc_id", "word"))
 
   /** q44 — document chunking: fixed-width character windows with
     * overlap (`step` < `width`), the standard pre-tokenization split a
@@ -291,19 +285,12 @@ object TextAnalysis {
     * corpus tokenize + pair explode + (doc,w1,w2) aggregation per
     * call. The leaf is the per-doc-deduplicated counts — strictly
     * smaller than the bigram stream (the q88 round-6 argument), now
-    * built once per corpus instead of once per consumer. Same key
-    * discipline as the sketch/print/calib memos; lazy (plan-audit)
-    * mode keeps the per-call persisted tower. */
-  private val bigramMemo = scala.collection.concurrent.TrieMap
-    .empty[(org.apache.spark.sql.SparkSession, Int, Int, Unit), DataFrame]
-
-  /** Drop the memoized bigram-count relations (multi-corpus drivers). */
-  def clearBigramMemo(): Unit = bigramMemo.clear()
-
-  /** The (doc_id, w1, w2, m) relation plus the persist handles the
-    * caller must release via `finishWith` — the fusedSketch contract:
-    * eager mode memoizes a checkpoint leaf (nothing to release); lazy
-    * mode persists the full tower so Explain sees it. */
+    * built once per corpus instead of once per consumer.
+    *
+    * Returns the relation plus the persist handles the caller must
+    * release via `finishWith` — the fusedSketch contract: eager mode
+    * memoizes a checkpoint leaf (nothing to release); lazy mode
+    * persists the full tower so Explain sees it. */
   private def docBigramCounts(docs: DataFrame): (DataFrame, Seq[DataFrame]) = {
     def plan = docBigrams(docs).groupBy("doc_id", "w1", "w2")
       .agg(count(lit(1)).as("m"))
@@ -311,7 +298,7 @@ object TextAnalysis {
       val p = plan.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       (p, Seq(p))
     } else
-      (Dedup.corpusMemo(bigramMemo, docs, ())(checkpointWideTA(plan))(
+      (Memos.get("bigrams", docs, ())(Memos.checkpointWide(plan))(
         sys.error("docBigramCounts lazy path must persist and return handles")),
         Nil)
   }
@@ -338,7 +325,7 @@ object TextAnalysis {
     // only the per-doc consumers need — the r14 verdict's one
     // code-linked regression (q62 0.67 → 1.01 s), recovered without
     // touching what q62 computes (identical counts either way).
-    val c = Dedup.corpusMemoPeek(bigramMemo, docs, ()) match {
+    val c = Memos.peek[DataFrame]("bigrams", docs, ()) match {
       case Some(b) => b.groupBy("w1", "w2").agg(sum(col("m")).as("c"))
       case None =>
         docBigrams(docs).groupBy("w1", "w2").agg(count(lit(1)).as("c"))
@@ -578,14 +565,6 @@ object TextAnalysis {
     (tc, labels, consts, model, fin)
   }
 
-  private val nbBaseMemo = scala.collection.concurrent.TrieMap
-    .empty[(org.apache.spark.sql.SparkSession, Int, Int, Unit),
-      (DataFrame, DataFrame)]
-
-  private def checkpointWideTA(df: DataFrame): DataFrame =
-    df.repartition(df.sparkSession.sessionState.conf.numShufflePartitions)
-      .localCheckpoint(true)
-
   /** Session-shared (tc, labels) — the ONE tokenize+label pass behind
     * the whole classifier family (q209/q213/q214 via the scored memo,
     * q221 selection, q223 incremental, q224 selected, q225/q226 eval,
@@ -601,9 +580,10 @@ object TextAnalysis {
       val (tc, labels) = nbBase(docs)
       (tc, labels, r => Dedup.finishWith(r, tc))
     } else {
-      val (tc, labels) = Dedup.corpusMemo(nbBaseMemo, docs, ()) {
+      val (tc, labels) = Memos.get("nbBase", docs, ()) {
         val (t, l) = nbBase(docs)
-        try (checkpointWideTA(t), checkpointWideTA(l)) finally t.unpersist()
+        try (Memos.checkpointWide(t), Memos.checkpointWide(l))
+        finally t.unpersist()
       } { val (t, l) = nbBase(docs); (t, l) }
       (tc, labels, r => Dedup.finishWith(r))
     }
@@ -678,13 +658,6 @@ object TextAnalysis {
     fin(art)
   }
 
-  private val nbMemo = scala.collection.concurrent.TrieMap
-    .empty[(org.apache.spark.sql.SparkSession, Int, Int, Unit), DataFrame]
-
-  /** Drop the memoized NB scored relation + the shared (tc, labels)
-    * base pair (multi-corpus drivers). */
-  def clearNbMemo(): Unit = { nbMemo.clear(); nbBaseMemo.clear() }
-
   /** The q209 train→score chain with the SEED LABEL kept on every row
     * — the shared core of the classifier family: q209 projects it to
     * the scored corpus, q213/q214 evaluate the held-out third against
@@ -695,7 +668,7 @@ object TextAnalysis {
     * the model itself ([[nbModelArtifact]]), not the scored corpus,
     * so the memo is deliberately not store-backed. */
   private[graft] def nbScoredLabeled(docs: DataFrame): DataFrame =
-    Dedup.corpusMemo(nbMemo, docs, ())(
+    Memos.get("nbScored", docs, ())(
       nbScoredBuild(docs))(nbScoredBuild(docs))
 
   private def nbScoredBuild(docs: DataFrame): DataFrame = {
@@ -1598,18 +1571,9 @@ object TextAnalysis {
     * q195 (pair inversion) consume the SAME winnowing artifact, the
     * way a pipeline stores its fingerprint table once and fans out;
     * the build (gram explode → window min → distinct) is the dominant
-    * cost of both. Same key discipline as the sketch/codebook/pair
-    * memos: (session, plan semanticHash, file-state fingerprint, k,
-    * w) — a corpus rewrite or different parameters can never serve
-    * stale prints. Lazy (plan-audit) mode bypasses it. */
-  private val printMemo = scala.collection.concurrent.TrieMap
-    .empty[(org.apache.spark.sql.SparkSession, Int, Int, (Int, Int)), DataFrame]
-
-  /** Drop memoized print relations (multi-corpus drivers). */
-  def clearPrintMemo(): Unit = printMemo.clear()
-
+    * cost of both. */
   private def winnowPrintsShared(docs: DataFrame, k: Int, w: Int): DataFrame =
-    Dedup.corpusMemo(printMemo, docs, (k, w))(
+    Memos.get("prints", docs, (k, w))(
       graft.sources.ArtifactStore
         .loadOrBuild("winnow_prints", docs, s"$k-$w")(winnowPrints(docs, k, w))
         .localCheckpoint(true))(
@@ -1663,20 +1627,13 @@ object TextAnalysis {
     * recall both build the same capped (doc_id, fp) relation off the
     * memoized prints (distinct + df aggregate + cap join) per call —
     * one build per (corpus, k, w, maxDf) now. */
-  private val winnowKeptMemo = scala.collection.concurrent.TrieMap
-    .empty[(org.apache.spark.sql.SparkSession, Int, Int, (Int, Int, Long)),
-      DataFrame]
-
-  /** Drop memoized capped-print relations (multi-corpus drivers). */
-  def clearWinnowKeptMemo(): Unit = winnowKeptMemo.clear()
-
   private def winnowKeptShared(docs: DataFrame, k: Int, w: Int,
       maxDf: Long): DataFrame =
-    Dedup.corpusMemo(winnowKeptMemo, docs, (k, w, maxDf))({
+    Memos.get("winnowKept", docs, (k, w, maxDf))({
       val kp = winnowKeptPrints(
         winnowPrintsShared(docs, k, w).select("doc_id", "fp").distinct(),
         maxDf)
-      try checkpointWideTA(kp) finally { kp.unpersist(); () }
+      try Memos.checkpointWide(kp) finally { kp.unpersist(); () }
     })(sys.error("winnowKeptShared is eager-mode only — lazy callers " +
       "keep the per-call tower"))
 
@@ -1684,17 +1641,10 @@ object TextAnalysis {
     * (doc_a, doc_b, n_shared) — the fp-keyed self-join is the dominant
     * per-call cost left after the print/kept memos; q195 and q267
     * consume the same relation. */
-  private val winnowPairMemo = scala.collection.concurrent.TrieMap
-    .empty[(org.apache.spark.sql.SparkSession, Int, Int,
-      (Int, Int, Long, Long)), DataFrame]
-
-  /** Drop memoized winnow pair relations (multi-corpus drivers). */
-  def clearWinnowPairMemo(): Unit = winnowPairMemo.clear()
-
   private def winnowPairsMemoized(docs: DataFrame, k: Int, w: Int,
       maxDf: Long, minShared: Long): DataFrame =
-    Dedup.corpusMemo(winnowPairMemo, docs, (k, w, maxDf, minShared))(
-      checkpointWideTA(
+    Memos.get("winnowPairs", docs, (k, w, maxDf, minShared))(
+      Memos.checkpointWide(
         winnowPairsOf(winnowKeptShared(docs, k, w, maxDf), minShared)))(
       sys.error("winnowPairsMemoized is eager-mode only — lazy callers " +
         "keep the per-call tower"))

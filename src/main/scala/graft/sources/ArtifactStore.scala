@@ -18,7 +18,7 @@ import org.apache.spark.sql.DataFrame
   * tower. Unset (the default), everything behaves exactly as before —
   * session-scoped memo only.
   *
-  * Key discipline is inherited from `Dedup.corpusMemo`: the
+  * Key discipline is inherited from `graft.tools.Memos`: the
   * semanticHash pins the QUERY (a different source projection can
   * never alias), the file-state fingerprint pins the DATA VERSION
   * (path, length, mtime of every file — a same-path corpus rewrite

@@ -229,7 +229,7 @@ object LabelStore {
   private def invalidateGateMemo(name: String): Unit =
     gateMemo.keySet.removeIf(k => k._1 == name || k._2 == name)
 
-  /** Measurement-protocol hook (the Memos.clearAll registry). */
+  /** Measurement-protocol hook, called by `Memos.clearAll`. */
   def clearGateMemo(): Unit = gateMemo.clear()
 
   /** Job description stamped on the count gate's two jobs. */

@@ -281,8 +281,8 @@ object CasLeaseBackend {
   *    the loser polls until the winner releases, then re-checks for
   *    the winner's completed artifact and SERVES it instead of
   *    double-building — closing the cross-process half of the
-  *    trainMemo double-build note (the in-process half is the memo's
-  *    own build lock).
+  *    BPE train tower's double-build note (the in-process half is
+  *    ArtifactStore's build lock).
   *
   * Liveness vs safety, the three-knob version:
   *

@@ -23,15 +23,7 @@ object ConfAB {
     val sf = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val names = args(0).split(",").toSeq
     def time(s: SparkSession, n: String): Double = {
-      graft.operators.Dedup.clearSketchMemo()
-      graft.operators.Dedup.clearSigMemo()
-      graft.operators.Dedup.clearPairMemo()
-      graft.operators.Dedup.clearClusterMemo()
-      graft.operators.TextAnalysis.clearPrintMemo()
-      graft.operators.TextAnalysis.clearNbMemo()
-      graft.operators.Similarity.clearPcaMemo()
-      graft.operators.Events.clearAnchorMemo()
-      graft.operators.Similarity.clearNswScoredMemo()
+      graft.tools.Memos.clearAll()
       val t0 = System.nanoTime()
       graft.SparkEntry.queries(n)(s, sf).count()
       (System.nanoTime() - t0) / 1e9

@@ -30,18 +30,15 @@ object NswDeltaProbe {
     Seq("g_probe", "g_probe_base", "g_probe_refined", "g_probe_meta")
       .foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
     GraphStore.build(spark, "g_probe", emb.where(col("vec_id") < vCap), vCap)
-    def clear(): Unit = {
-      graft.operators.Similarity.clearNswScoredMemo()
-    }
     def minOf(n: Int)(body: => Unit): Double =
       (1 to n).map { _ =>
-        clear()
+        Memos.clearAll()
         val t0 = System.nanoTime()
         body
         (System.nanoTime() - t0) / 1e9
       }.min
     // warmup
-    clear()
+    Memos.clearAll()
     GraphStore.update(spark, "g_probe", emb, vMax)._3.queryExecution.toRdd.count()
     val tState = minOf(5)(GraphStore.storeState(spark, "g_probe"))
     val tQuery = minOf(5)(graft.operators.Similarity
@@ -60,7 +57,7 @@ object NswDeltaProbe {
     // full-path phase split: base / refined / graph counts in sequence
     // (caches populate in order, so each number is one stage tier)
     val phases = (1 to 3).map { _ =>
-      clear()
+      Memos.clearAll()
       val (b, r, g) = GraphStore.update(spark, "g_probe", emb, vMax)
       val t0 = System.nanoTime()
       b.queryExecution.toRdd.count()

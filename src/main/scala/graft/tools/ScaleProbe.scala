@@ -29,8 +29,6 @@ import org.apache.spark.sql.functions._
   * and the exponent, plus a table ready for PLANS.md. */
 object ScaleProbe {
 
-  private def clearMemos(): Unit = Memos.clearAll()
-
   /** 10 disjoint tagged replicas of `docs` (see scaladoc). */
   private[tools] def replicate(docs: DataFrame, copies: Int, n: Long): DataFrame =
     docs
@@ -242,25 +240,25 @@ object ScaleProbe {
               finally walk.close()
             }
           }
-        clearMemos()
+        Memos.clearAll()
         SketchStore.save(oldDocs, s"sp_sketch_$sfx")
-        clearMemos()
+        Memos.clearAll()
         LabelStore.save(
           graft.operators.Dedup.dedupClustersScale(oldDocs, threshold),
           s"sp_labels_$sfx")
-        clearMemos()
+        Memos.clearAll()
         LabelStore.saveKeepers(
           graft.operators.Dedup.dedupOutput(oldDocs, threshold),
           s"sp_keepers_$sfx")
-        clearMemos()
+        Memos.clearAll()
         GraphStore.build(spark, s"sp_graph_$sfx",
           emb.where(col("vec_id") < vCap), vCap)
         val tmp = java.nio.file.Files
           .createTempDirectory(s"scaleprobe_store_$sfx").toString
-        clearMemos()
+        Memos.clearAll()
         graft.operators.Events.olsStateDelta(ev.where(col("event_id") < eCap))
           .write.mode("overwrite").parquet(s"$tmp/ols_state")
-        clearMemos()
+        Memos.clearAll()
         graft.operators.TextAnalysis.nbStateDelta(oldDocs)
           .write.mode("overwrite").parquet(s"$tmp/nb_state")
         s -> (sfx, tmp, batchDocs, emb, ev, eCap, vMax)
@@ -298,7 +296,7 @@ object ScaleProbe {
         tenxQueries.map { case (n, f) => n -> ((s: String) => f(dirAt(s))) } ++
         storeProbes
     // JVM/codegen warmup outside the measured window
-    clearMemos()
+    Memos.clearAll()
     allProbes.foreach { case (_, f) => runFull(f("0.1x")) }
 
     // Round-13 (verdict #6): some rows' honest cost axis is BYTES, not
@@ -318,7 +316,7 @@ object ScaleProbe {
     val rows = allProbes.map { case (name, f) =>
       val times = scales.map { s =>
         val t = (1 to 2).map { _ =>
-          clearMemos()
+          Memos.clearAll()
           val t0 = System.nanoTime()
           runFull(f(s))
           (System.nanoTime() - t0) / 1e9

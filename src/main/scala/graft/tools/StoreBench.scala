@@ -39,8 +39,6 @@ import org.apache.spark.sql.functions._
   */
 object StoreBench {
 
-  private def clearMemos(): Unit = Memos.clearAll()
-
   private def runFull(df: DataFrame): Unit = {
     df.queryExecution.toRdd.count(); ()
   }
@@ -48,7 +46,7 @@ object StoreBench {
   /** min-of-`runs` wall seconds of `mk`, memos cleared per sample. */
   private def time(runs: Int)(mk: => DataFrame): Double =
     (1 to runs).map { _ =>
-      clearMemos()
+      Memos.clearAll()
       val t0 = System.nanoTime()
       runFull(mk)
       (System.nanoTime() - t0) / 1e9
@@ -85,7 +83,7 @@ object StoreBench {
       "sb_graph", "sb_graph_base", "sb_graph_refined", "sb_graph_meta")
 
     // JVM/codegen warmup outside the measured window (tiny corpus)
-    clearMemos()
+    Memos.clearAll()
     try { graft.SparkEntry.entry(spark).count(); () }
     catch { case _: Throwable => () }
 
@@ -115,13 +113,13 @@ object StoreBench {
       if (wanted("q202_clusters") || wanted("q272_keepers") ||
           wanted("q269_serving")) {
         SketchStore.save(oldDocs, "sb_sketch")
-        clearMemos()
+        Memos.clearAll()
         LabelStore.save(
           graft.operators.Dedup.dedupClustersScale(oldDocs, threshold),
           "sb_labels")
       }
       if (wanted("q272_keepers") || wanted("q269_serving")) {
-        clearMemos()
+        Memos.clearAll()
         LabelStore.saveKeepers(
           graft.operators.Dedup.dedupOutput(oldDocs, threshold), "sb_keepers")
       }

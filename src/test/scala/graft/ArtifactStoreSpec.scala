@@ -4,6 +4,7 @@ import java.nio.file.{Files, Paths, StandardCopyOption}
 
 import graft.operators.{Bpe, Dedup}
 import graft.sources.ArtifactStore
+import graft.tools.Memos
 
 /** The persistent artifact store (round-7 verdict #6): with
   * `spark.graft.artifactDir` set, the sketch/print/codebook/train
@@ -30,22 +31,20 @@ class ArtifactStoreSpec extends SparkSpec {
 
   test("store disabled by default: no artifact traffic") {
     val (h0, m0) = counters
-    Dedup.clearSketchMemo()
-    // round 14: the verified-pair memo sits ABOVE the sketch tower —
-    // clear it too, or a prior test's pair leaf serves the call before
-    // it ever reaches the artifact-backed sketch build
-    Dedup.clearVerifiedPairsMemo()
+    // every tower, the verified-pair one above the sketch included —
+    // a prior test's pair leaf would serve the call before it ever
+    // reaches the artifact-backed sketch build
+    Memos.clearAll()
     val docs = spark.read.parquet(corpusPath)
     Dedup.minhashNearDup(docs, 0.95).collect()
     assert(counters === ((h0, m0)), "artifactDir unset must not touch the store")
   }
 
   test("a second session serves the stored sketch: build once, load thereafter") {
-    Dedup.clearSketchMemo()
-    // round 14: the verified-pair memo sits ABOVE the sketch tower —
-    // clear it too, or a prior test's pair leaf serves the call before
-    // it ever reaches the artifact-backed sketch build
-    Dedup.clearVerifiedPairsMemo()
+    // every tower, the verified-pair one above the sketch included —
+    // a prior test's pair leaf would serve the call before it ever
+    // reaches the artifact-backed sketch build
+    Memos.clearAll()
     spark.conf.set("spark.graft.artifactDir", storeDir)
     try {
       val (h0, m0) = counters
@@ -72,11 +71,10 @@ class ArtifactStoreSpec extends SparkSpec {
   }
 
   test("a corpus rewrite (mtime change) invalidates the key: no stale serve") {
-    Dedup.clearSketchMemo()
-    // round 14: the verified-pair memo sits ABOVE the sketch tower —
-    // clear it too, or a prior test's pair leaf serves the call before
-    // it ever reaches the artifact-backed sketch build
-    Dedup.clearVerifiedPairsMemo()
+    // every tower, the verified-pair one above the sketch included —
+    // a prior test's pair leaf would serve the call before it ever
+    // reaches the artifact-backed sketch build
+    Memos.clearAll()
     spark.conf.set("spark.graft.artifactDir", storeDir)
     try {
       // warm the artifact under the current fingerprint
@@ -97,7 +95,7 @@ class ArtifactStoreSpec extends SparkSpec {
   }
 
   test("BPE training artifact: the (merges, encoder) pair persists across sessions") {
-    Bpe.clearTrainMemo()
+    Memos.clearAll()
     spark.conf.set("spark.graft.artifactDir", storeDir)
     try {
       val (h0, m0) = counters
@@ -117,7 +115,7 @@ class ArtifactStoreSpec extends SparkSpec {
 
   test("NSW scored-candidate artifact: a second session loads instead of re-scoring") {
     import graft.operators.Similarity
-    Similarity.clearNswScoredMemo()
+    Memos.clearAll()
     spark.conf.set("spark.graft.artifactDir", storeDir)
     try {
       val (h0, m0) = counters
@@ -145,7 +143,7 @@ class ArtifactStoreSpec extends SparkSpec {
 
   test("PCA component artifact: a second session loads the trained component") {
     import graft.operators.Similarity
-    Similarity.clearPcaMemo()
+    Memos.clearAll()
     spark.conf.set("spark.graft.artifactDir", storeDir)
     try {
       val (h0, m0) = counters

@@ -1,39 +1,46 @@
 package graft
 
-import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.sql.DataFrame
 
-/** Pins the cold-protocol artifact matcher (Bench.artifactPattern):
+import graft.operators.{Dedup, InvertedIndex, Similarity}
+import graft.sources.Tables
+import graft.tools.Memos
+
+/** Pins the cold protocol's two resets: `Memos.clearAll` (session
+  * towers) and the artifact matcher (Bench.artifactPattern):
   * the clear for one corpus dir must hit every artifact shape the
   * sources actually write for THAT dir and none of a sibling scale's —
   * the earlier bare-substring match deleted /root/testdata/sf10's
   * artifacts when clearing for /root/testdata/sf1. */
-class BenchArtifactSpec extends AnyFunSuite {
+class BenchArtifactSpec extends SparkSpec {
 
   private def matches(sfDir: String, name: String): Boolean =
     Bench.artifactPattern(sfDir).pattern.matcher(name).matches()
 
-  test("Memos.clearAll registers every operator session memo") {
-    // The cold protocol's claim — "every pass prices builds" — is only
-    // as strong as clearAll's coverage. Scan the operators package for
-    // public `def clearX(): Unit` memo hooks and assert each one is
-    // invoked from Memos.scala, so a new memo that forgets to register
-    // fails HERE instead of silently serving warm hits to passes 2+.
-    import scala.jdk.CollectionConverters._
-    val opsDir = java.nio.file.Paths.get("src/main/scala/graft/operators")
-    assume(java.nio.file.Files.isDirectory(opsDir))
-    val hook = """def (clear\w+)\(\): Unit""".r
-    val declared = java.nio.file.Files.list(opsDir).iterator().asScala
-      .filter(_.toString.endsWith(".scala"))
-      .flatMap(p => hook.findAllMatchIn(
-        new String(java.nio.file.Files.readAllBytes(p), "UTF-8"))
-        .map(_.group(1)))
-      .toSet
-    val memos = new String(java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get("src/main/scala/graft/tools/Memos.scala")), "UTF-8")
-    val missing = declared.filterNot(h => memos.contains(s".$h()"))
-    assert(declared.nonEmpty)
-    assert(missing.isEmpty,
-      s"operator memo hooks not registered in Memos.clearAll: $missing")
+  test("Memos.clearAll drops every tower; the next call rebuilds identical rows") {
+    // The cold protocol's claim — "every pass prices builds" — needs
+    // clearAll to forget every tower. Registration is by construction
+    // (a tower exists only as a registry entry), so a cleared registry
+    // is empty and the next call pays the build again.
+    val docs = Tables(spark, testdataDir, "documents")
+    val emb = Tables(spark, testdataDir, "embeddings")
+    def rows(df: DataFrame) = df.collect().map(_.toString).toSeq.sorted
+    def build() = Seq(rows(Dedup.minhashNearDup(docs, 0.95)),
+      rows(InvertedIndex.bm25Search(docs, Seq("spark", "join"), 10)),
+      rows(Similarity.pqAnn(emb, 10, 3)))
+    val sc = spark.sparkContext
+    Memos.clearAll()
+    val first = build()
+    val towers = Memos.names.toSet
+    assert(Set("sketch", "bm25", "trainedPq").subsetOf(towers))
+    Memos.clearAll()
+    assert(Memos.names.isEmpty)
+    val before = sc.getPersistentRDDs.keySet
+    assert(build() === first)
+    assert(Memos.names.toSet === towers)
+    assert((sc.getPersistentRDDs.keySet -- before).size >= towers.size,
+      "a cleared tower was served instead of rebuilt")
+    Memos.clearAll()
   }
 
   test("matches every real artifact shape for the target dir") {

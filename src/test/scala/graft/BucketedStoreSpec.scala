@@ -8,6 +8,7 @@ import org.apache.spark.sql.functions._
 
 import graft.operators.{Dedup, Similarity}
 import graft.sources.{IndexStore, SketchStore, Tables, VectorStore}
+import graft.tools.Memos
 
 /** Bucketed stored indexes: the 100 TB design property that an
   * incremental probe joins the STORED side with no Exchange — the
@@ -241,11 +242,11 @@ class BucketedStoreSpec extends SparkSpec {
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3),
         r.getLong(4))).sortBy(_._1).toList
     def rebuilt(upTo: Long) = {
-      Dedup.clearSketchMemo(); Dedup.clearClusterMemo()
+      Memos.clearAll()
       val out = Dedup.dedupOutput(docs.where($"doc_id" < upTo), 0.95)
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
           r.getLong(3), r.getLong(4))).sortBy(_._1).toList
-      Dedup.clearSketchMemo(); Dedup.clearClusterMemo()
+      Memos.clearAll()
       out
     }
 
@@ -386,11 +387,11 @@ class BucketedStoreSpec extends SparkSpec {
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3),
         r.getLong(4))).sortBy(_._1).toList
     def rebuilt(upTo: Long) = {
-      Dedup.clearSketchMemo(); Dedup.clearClusterMemo()
+      Memos.clearAll()
       val out = Dedup.dedupOutput(docs.where($"doc_id" < upTo), 0.95)
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
           r.getLong(3), r.getLong(4))).sortBy(_._1).toList
-      Dedup.clearSketchMemo(); Dedup.clearClusterMemo()
+      Memos.clearAll()
       out
     }
 
@@ -484,7 +485,7 @@ class BucketedStoreSpec extends SparkSpec {
         r.getLong(4))).toSet
     val prod = rows(LabelStore.upgradeEvents(
       spark, labelTbl, sketchTbl, keeperTbl, day1, 0.95))
-    Dedup.clearSketchMemo(); Dedup.clearClusterMemo()
+    Memos.clearAll()
     val query = rows(Dedup.keeperUpgrades(docs, cap, 0.95))
     assert(prod === query, "production upgrade feed diverged from q269")
     assert(prod.nonEmpty, "no upgrade events on this split — vacuous")
@@ -505,7 +506,7 @@ class BucketedStoreSpec extends SparkSpec {
       spark.table(keeperTbl),
       LabelStore.keeperOverrides(LabelStore.upgradeEvents(
         spark, labelTbl, sketchTbl, keeperTbl, day1, 0.95))))
-    Dedup.clearSketchMemo(); Dedup.clearClusterMemo()
+    Memos.clearAll()
     val queryServed = served(LabelStore.servingKeepers(
       Dedup.dedupOutput(day0, 0.95),
       LabelStore.keeperOverrides(Dedup.keeperUpgrades(docs, cap, 0.95))))
@@ -526,7 +527,7 @@ class BucketedStoreSpec extends SparkSpec {
     }
     assert(gateErr.getMessage.contains("rebuildKeepers"),
       s"wrong gate error: ${gateErr.getMessage}")
-    Dedup.clearSketchMemo(); Dedup.clearClusterMemo()
+    Memos.clearAll()
     allTbls.foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
   }
 

@@ -4,6 +4,7 @@ import org.apache.spark.sql.functions._
 
 import graft.operators.Similarity
 import graft.sources.Tables
+import graft.tools.Memos
 
 /** Graph-based ANN (NSW — the flat ancestor of HNSW, round-7 "What's
   * missing" #4): spec-gated like the streaming family (a beam search
@@ -141,11 +142,11 @@ class NswSpec extends SparkSpec {
       "library sessions must disable the union partitioning claim")
     def run() = Similarity.nswGraph(emb).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).sorted.toList
-    Similarity.clearNswScoredMemo()
+    Memos.clearAll()
     val clean = run()
     // prime the memo through the artifact store exactly as a restarted
     // pipeline would, then recompute over the primed (parquet-leaf) memo
-    Similarity.clearNswScoredMemo()
+    Memos.clearAll()
     val dir = java.nio.file.Files.createTempDirectory("nsw_reg").toString
     spark.conf.set("spark.graft.artifactDir", dir)
     try Similarity.nswGraph(
@@ -157,7 +158,7 @@ class NswSpec extends SparkSpec {
     assert(primed === clean,
       "artifact-primed rebuild diverged from the fresh build")
     assert(inc === clean, "incremental diverged over the primed memo")
-    Similarity.clearNswScoredMemo()
+    Memos.clearAll()
   }
 
   test("beam search navigates beyond the entry set (the graph earns its keep)") {

@@ -4,6 +4,7 @@ import org.apache.spark.sql.functions._
 
 import graft.operators._
 import graft.sources.Tables
+import graft.tools.Memos
 
 /** Structural invariants + non-vacuity for the round-3 operators
   * (q59–q77). Per the round-2 lesson (q53): a green oracle row can be
@@ -518,7 +519,7 @@ class PipelineOpsSpec extends SparkSpec {
 
   test("q277 keeper quota: best-first per source, verdicts recounted, total = keeper relation") {
     val docs = t("documents")
-    Dedup.clearSketchMemo(); Dedup.clearClusterMemo()
+    Memos.clearAll()
     val rows = Dedup.keeperQuota(docs, 10).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getString(2), r.getLong(3),
         r.getBoolean(4)))
@@ -539,12 +540,12 @@ class PipelineOpsSpec extends SparkSpec {
     // the cap must actually bind somewhere, and admit somewhere
     assert(rows.exists(!_._5), "quota never binds — vacuous")
     assert(rows.exists(_._5))
-    Dedup.clearSketchMemo(); Dedup.clearClusterMemo()
+    Memos.clearAll()
   }
 
   test("q278 drop attribution: one row per dropped member; chain drops sit below threshold") {
     val docs = t("documents")
-    Dedup.clearSketchMemo(); Dedup.clearClusterMemo()
+    Memos.clearAll()
     val rows = Dedup.dropAttribution(docs).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
     val keepers = Dedup.dedupOutput(docs).collect()
@@ -561,12 +562,12 @@ class PipelineOpsSpec extends SparkSpec {
     // dropped docs BELOW the pairwise threshold against their keeper
     assert(rows.exists(_._4 < 950000L),
       "no below-threshold chain drop — the attribution is vacuous here")
-    Dedup.clearSketchMemo(); Dedup.clearClusterMemo()
+    Memos.clearAll()
   }
 
   test("q279/q280 source audits: totals reconcile, cross-source structure recounted") {
     val docs = t("documents")
-    Dedup.clearSketchMemo(); Dedup.clearClusterMemo()
+    Memos.clearAll()
     val rates = Dedup.sourceDupRate(docs).collect()
       .map(r => (r.getString(0), r.getLong(1), r.getLong(2), r.getLong(3),
         r.getLong(4)))
@@ -595,7 +596,7 @@ class PipelineOpsSpec extends SparkSpec {
       .map(r => (r.getString(0), r.getString(1), r.getLong(2))).toSet
     assert(got === expected)
     assert(got.nonEmpty, "no cluster spans two sources — vacuous")
-    Dedup.clearSketchMemo(); Dedup.clearClusterMemo()
+    Memos.clearAll()
   }
 
   test("q281/q282 sensitivity curves: complete grids, monotone, anchored to the dedup relations") {
@@ -681,7 +682,7 @@ class PipelineOpsSpec extends SparkSpec {
 
   test("q276 simhash calibration: matcher rows accounted, estimator tracks similarity") {
     val docs = t("documents")
-    Dedup.clearSketchMemo()
+    Memos.clearAll()
     val cal = Dedup.simhashCalibration(docs, 3).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3),
         r.getLong(4)))
@@ -700,7 +701,7 @@ class PipelineOpsSpec extends SparkSpec {
     assert(cal.exists(_._1 > 3), "no chance-collision tail — vacuous")
     assert(cal.minBy(_._1)._3 > cal.maxBy(_._1)._3,
       "Hamming distance does not track Jaccard — estimator broken")
-    Dedup.clearSketchMemo()
+    Memos.clearAll()
   }
 
   test("simhashMatchScale routes to the 64-bit production family") {
@@ -2417,6 +2418,22 @@ class PipelineOpsSpec extends SparkSpec {
     assert(free === 201L * 200L / 2L)
   }
 
+  test("q227 basket cap below 2 is refused up front") {
+    import spark.implicits._
+    // a capped basket below 2 items holds no pair: refuse the cap at
+    // the call, not with an index error (cap 1) or an empty result
+    // (cap 0) at run time
+    val g = Seq((1L, 10L), (1L, 11L), (1L, 12L)).toDF("l_orderkey", "l_partkey")
+    for (cap <- Seq(1, 0, -1)) {
+      val e = intercept[IllegalArgumentException](
+        Relational.basketPairs(g, minSupport = 1L, maxBasket = cap).collect())
+      assert(e.getMessage.contains("maxBasket"), s"cap=$cap")
+    }
+    // the smallest legal cap keeps the two rarest items: one pair
+    assert(Relational.basketPairs(g, minSupport = 1L, maxBasket = 2)
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq === Seq((10L, 11L)))
+  }
+
   test("q257 float quantiles: true quantile inside the chosen bucket; wide range, signs, subnormals") {
     import spark.implicits._
     // the containment law on the real corpus: the exact boundary-rule
@@ -2849,13 +2866,13 @@ class PipelineOpsSpec extends SparkSpec {
       (probe.collectFirst { case (id, "train") if id != trainId => id }.get,
         "completely different words entirely elsewhere")
     ).toDF("doc_id", "text")
-    Dedup.clearSketchMemo()
+    Memos.clearAll()
     val planted = Sampling.splitLeakage(synth).collect().head
     assert(planted.getLong(1) === 1L, "the planted cross edge was missed")
     assert(planted.getLong(2) === 1L)
     assert(planted.getLong(0) === 1L)
     assert(planted.getLong(3) === 1000000L, "one of one val docs leaked")
-    Dedup.clearSketchMemo()
+    Memos.clearAll()
   }
 
   test("q260 keep-best: longest member kept per cluster; truncation family planted") {
@@ -2886,12 +2903,12 @@ class PipelineOpsSpec extends SparkSpec {
       (2L, full, full.length.toLong),
       (3L, "totally unrelated content here", 30L)
     ).toDF("doc_id", "text", "n_chars")
-    Dedup.clearSketchMemo(); Dedup.clearClusterMemo()
+    Memos.clearAll()
     val planted = Dedup.keepBest(synth, 0.95).collect()
       .map(r => (r.getLong(0), r.getLong(2), r.getBoolean(3)))
     assert(planted.toSet === Set((1L, 2L, false), (2L, 2L, true),
       (3L, 3L, true)), s"got ${planted.toSeq}")
-    Dedup.clearSketchMemo(); Dedup.clearClusterMemo()
+    Memos.clearAll()
   }
 
   test("q262 dedup output: keeper rules agree with q260/q58; sums recounted; no corpus rejoin") {
@@ -2940,14 +2957,14 @@ class PipelineOpsSpec extends SparkSpec {
       (11L, shorter, shorter.length.toLong), // j(11,1)=93/96 ≥ .95, shorter → no row
       (12L, "entirely novel content nothing matches", 38L) // no match → no row
     ).toDF("doc_id", "text", "n_chars")
-    Dedup.clearSketchMemo(); Dedup.clearClusterMemo()
+    Memos.clearAll()
     val planted = Dedup.keeperUpgrades(synth, 10L).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3),
         r.getLong(4)))
     assert(planted.toSeq === Seq(
       (1L, 1L, 10L, excerpt.length.toLong, full.length.toLong)),
       s"got ${planted.toSeq}")
-    Dedup.clearSketchMemo(); Dedup.clearClusterMemo()
+    Memos.clearAll()
     // corpus recount from the independently-gated components: stored
     // keepers (q262), stored labels (q58), cross matches (q90), the
     // gate's min-label assignment, the q262 struct-key predicate
@@ -2983,7 +3000,7 @@ class PipelineOpsSpec extends SparkSpec {
     // rebuild row for row (the committed oracle is the same proof at
     // sf0.01 — this pins it at spec scale too)
     val docs = t("documents")
-    Dedup.clearSketchMemo(); Dedup.clearClusterMemo()
+    Memos.clearAll()
     def rows(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3),
         r.getLong(4))).toSet
@@ -3001,16 +3018,16 @@ class PipelineOpsSpec extends SparkSpec {
       (10L, w(1, 100)))
       .map { case (id, txt) => (id, txt, txt.length.toLong) }
       .toDF("doc_id", "text", "n_chars")
-    Dedup.clearSketchMemo(); Dedup.clearClusterMemo()
+    Memos.clearAll()
     val got = rows(Dedup.incrementalDedupOutput(synth, 10L))
     val lens = synth.collect().map(r => r.getLong(0) -> r.getLong(2)).toMap
     assert(got === Set(
       (10L, 1L, 3L, lens(10L), lens(1L) + lens(2L)),
       (3L, 3L, 1L, lens(3L), 0L)), s"got $got")
-    Dedup.clearSketchMemo(); Dedup.clearClusterMemo()
+    Memos.clearAll()
     val rebuilt = rows(Dedup.dedupOutput(synth))
     assert(got === rebuilt)
-    Dedup.clearSketchMemo(); Dedup.clearClusterMemo()
+    Memos.clearAll()
   }
 
   test("q270 IVF cell balance ≡ q92 assignment recount; shares and loads exact") {
@@ -3040,7 +3057,7 @@ class PipelineOpsSpec extends SparkSpec {
 
   test("q271 minhash calibration ≡ brute-force recount from q89 signatures + token sets") {
     val docs = t("documents")
-    Dedup.clearSketchMemo()
+    Memos.clearAll()
     val got = Dedup.minhashCalibration(docs).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3),
         r.getLong(4)))
@@ -3077,12 +3094,12 @@ class PipelineOpsSpec extends SparkSpec {
     assert(got.toSet === expected)
     assert(got.map(_._2).sum === bandPairs.size.toLong,
       "every candidate pair must be audited exactly once")
-    Dedup.clearSketchMemo()
+    Memos.clearAll()
   }
 
   test("q274 banded calibration: marginals reproduce q271 exactly; conditioning non-vacuous") {
     val docs = t("documents")
-    Dedup.clearSketchMemo()
+    Memos.clearAll()
     val banded = Dedup.minhashCalibrationByLength(docs).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3),
         r.getLong(4), r.getLong(5)))
@@ -3102,7 +3119,7 @@ class PipelineOpsSpec extends SparkSpec {
     assert(flat.map(_._2).sum === banded.map(_._3).sum)
     assert(banded.map(_._1).distinct.length > 1,
       "every candidate pair in one length band — conditioning vacuous")
-    Dedup.clearSketchMemo()
+    Memos.clearAll()
   }
 
   test("q273 pq distortion: exact-zero on a memorizable corpus, lossy tail on the real one") {
@@ -3120,12 +3137,12 @@ class PipelineOpsSpec extends SparkSpec {
     // bucket 0, both quantiles
     val v = Array.tabulate(64)(i => if (i < 4) 0.5f else 0f)
     val synth = (0L until 64L).map(i => (i, v)).toDF("vec_id", "embedding")
-    Similarity.clearTrainedPq()
+    Memos.clearAll()
     val zrow = Similarity.pqDistortion(synth).collect().head
     assert(zrow.getLong(0) === 64L)
     assert(zrow.getLong(1) === 0L && zrow.getLong(4) === 0L,
       s"memorizable corpus still distorted: $zrow")
-    Similarity.clearTrainedPq()
+    Memos.clearAll()
   }
 
   test("q228 RFM ≡ brute-force recount; grid covers every customer") {

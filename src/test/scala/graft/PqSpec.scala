@@ -2,6 +2,7 @@ package graft
 
 import graft.operators.Similarity
 import graft.sources.Tables
+import graft.tools.Memos
 
 /** q106 product quantization: recall against the exact baseline,
   * partitioning-invariance of the quantized training arithmetic, and
@@ -108,17 +109,17 @@ class PqSpec extends SparkSpec {
   }
 
   test("q106/q107 share ONE trained codebook per session (memo)") {
-    Similarity.clearTrainedPq()
+    Memos.clearAll()
     val emb = Tables(spark, testdataDir, "embeddings")
     val a = Similarity.pqAnn(emb, 10, 3).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getLong(3))).toList
-    assert(Similarity.trainedPqSize === 1)
+    assert(Memos.names.count(_ == "trainedPq") === 1)
     // ivfPqAnn reads the table through its own Tables() call — the
     // semanticHash key must still hit (two reads of one path
     // canonicalize equal), so NO second Lloyd chain runs
     assert(Similarity.ivfPqAnn(Tables(spark, testdataDir, "embeddings"), 10, 3)
       .count() > 0)
-    assert(Similarity.trainedPqSize === 1,
+    assert(Memos.names.count(_ == "trainedPq") === 1,
       "ivfPqAnn retrained instead of reusing the session codebook")
     // reuse is result-invariant: a repeat probe serves identical rows
     val b = Similarity.pqAnn(emb, 10, 3).collect()

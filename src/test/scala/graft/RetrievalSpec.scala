@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.DataFrame
 
 import graft.operators.InvertedIndex
+import graft.tools.Memos
 
 /** q98 index merge and q99 BM25 ranked retrieval — the incremental
   * maintenance and scoring consumers of the index artifact. */
@@ -56,6 +57,20 @@ class RetrievalSpec extends SparkSpec {
     assert(InvertedIndex.bm25Search(corpus, Seq("absent"), 5).isEmpty)
     val empty = Seq.empty[(Long, String)].toDF("doc_id", "text")
     assert(InvertedIndex.bm25Search(empty, Seq("spark"), 5).isEmpty)
+  }
+
+  test("bm25: a permuted term list serves the same rows from the same tower") {
+    Memos.clearAll()
+    def ranked(terms: String*) = InvertedIndex.bm25Search(corpus, terms, 10)
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toList
+    val sc = spark.sparkContext
+    val first = ranked("spark", "join", "batch")
+    val pinned = sc.getPersistentRDDs.keySet
+    assert(ranked("batch", "spark", "join", "spark") === first)
+    assert((sc.getPersistentRDDs.keySet -- pinned).isEmpty,
+      "the permuted query rebuilt the scoring tower")
+    assert(Memos.names.count(_ == "bm25") === 1)
+    Memos.clearAll()
   }
 
   test("bm25 is partitioning-invariant (quantized integer term sums)") {

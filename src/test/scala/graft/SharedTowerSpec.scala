@@ -4,6 +4,7 @@ import org.apache.spark.sql.DataFrame
 
 import graft.operators.{Dedup, Similarity, TextAnalysis}
 import graft.sources.Tables
+import graft.tools.Memos
 
 /** Round-14 optimization gates: several operators switched their EAGER
   * path onto session-memoized shared towers (verified-pair leaf, the
@@ -167,7 +168,7 @@ class SharedTowerSpec extends SparkSpec {
   }
 
   test("round 15: q62 first-consumer fast path ≡ leaf fold ≡ lazy tower") {
-    TextAnalysis.clearBigramMemo()
+    Memos.clearAll()
     val first = rows(TextAnalysis.bigramLm(docs)) // leaf absent: one-level aggregation
     TextAnalysis.lmScore(docs).collect() // builds the shared bigram leaf
     val after = rows(TextAnalysis.bigramLm(docs)) // leaf fold

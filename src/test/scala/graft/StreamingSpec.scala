@@ -6,6 +6,7 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 
 import graft.streaming.EventStreams
 import graft.streaming.EventStreams.Ev
+import graft.tools.Memos
 
 /** Streaming is outside the DuckDB oracle (SURVEY §2.C) — MemoryStream
   * drives the transforms synchronously here instead. */
@@ -702,10 +703,10 @@ class StreamingSpec extends SparkSpec {
     // q90 Jaccard matches, folded by min stored label — the gate's one
     // assignment rule
     val union = oldDocs.unionByName(arrivals.toDF("doc_id", "text"))
-    Dedup.clearSketchMemo(); TextAnalysis.clearPrintMemo()
+    Memos.clearAll()
     val q267 = Dedup.containmentRecall(union).collect()
       .map(r => (r.getLong(0), r.getLong(1)))
-    Dedup.clearSketchMemo(); TextAnalysis.clearPrintMemo()
+    Memos.clearAll()
     val crossCont = q267.filter { case (a, b) => a <= 3L && b >= 10L }
       .map { case (a, b) => (b, a) } // (arrival, stored)
     assert(crossCont.contains((10L, 1L)),
@@ -774,16 +775,14 @@ class StreamingSpec extends SparkSpec {
       // stream ≡ batch: the q269 relation on the combined split emits
       // the same events (the mover doc is excluded — it never streamed
       // through the batch frame either)
-      graft.operators.Dedup.clearSketchMemo()
-      graft.operators.Dedup.clearClusterMemo()
+      Memos.clearAll()
       val all = oldDocs.unionByName(
         arrivals.toDF("doc_id", "text", "n_chars"))
       val batch = graft.operators.Dedup.keeperUpgrades(all, 10L).collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3),
           r.getLong(4))).toSet
       assert(batch === got)
-      graft.operators.Dedup.clearSketchMemo()
-      graft.operators.Dedup.clearClusterMemo()
+      Memos.clearAll()
 
       // ONLINE APPLY (round-11): folding the streamed events into the
       // override relation and overlaying it on the stored q262 table
@@ -795,8 +794,7 @@ class StreamingSpec extends SparkSpec {
           LabelStore.keeperOverrides(spark.table("upgrades")))
         .collect()
         .map(r => r.getLong(1) -> ((r.getLong(0), r.getBoolean(4)))).toMap
-      graft.operators.Dedup.clearSketchMemo()
-      graft.operators.Dedup.clearClusterMemo()
+      Memos.clearAll()
       val committed = graft.operators.Dedup
         .incrementalDedupOutput(all, 10L).collect()
         .map(r => r.getLong(1) -> r.getLong(0)).toMap
@@ -807,8 +805,7 @@ class StreamingSpec extends SparkSpec {
       }
       assert(serving(1L) === ((10L, true)), "the upgrade was not served")
       assert(serving(2L)._2 === false, "an un-upgraded cluster was overridden")
-      graft.operators.Dedup.clearSketchMemo()
-      graft.operators.Dedup.clearClusterMemo()
+      Memos.clearAll()
     } finally q.stop()
   }
 
@@ -864,8 +861,7 @@ class StreamingSpec extends SparkSpec {
       // into cluster 1, witnessed by doc 10; the novel doc emits nothing
       assert(got === Set((2L, 1L, 10L)))
       // stream ≡ batch: q275 on the combined split emits the same rows
-      graft.operators.Dedup.clearSketchMemo()
-      graft.operators.Dedup.clearClusterMemo()
+      Memos.clearAll()
       val all = oldDocs.unionByName(Seq(
         (10L, a, a.length.toLong),
         (11L, "entirely novel content nothing matches", 38L))
@@ -873,8 +869,7 @@ class StreamingSpec extends SparkSpec {
       val batch = graft.operators.Dedup.mergePending(all, 10L).collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
       assert(batch === got)
-      graft.operators.Dedup.clearSketchMemo()
-      graft.operators.Dedup.clearClusterMemo()
+      Memos.clearAll()
 
       // SERVED OVERLAY: both clusters of the pending merge read as
       // merge_pending (identity about to change); keeper fields are
@@ -894,8 +889,7 @@ class StreamingSpec extends SparkSpec {
         "absorbing cluster not flagged merge_pending")
       assert(served(2L) === ((2L, false, true)),
         "absorbed cluster not flagged merge_pending")
-      graft.operators.Dedup.clearSketchMemo()
-      graft.operators.Dedup.clearClusterMemo()
+      Memos.clearAll()
     } finally q.stop()
   }
 
