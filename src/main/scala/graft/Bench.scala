@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
   /** Anchored matcher for THIS corpus dir's cross-JVM tmp artifacts.
     * Shape (IndexStore/Sidecar/VectorStore):
@@ -39,21 +38,7 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // Wrong-results guard (found in-round via the q206 merge law; see
-      // NswSpec "union partitioning claim"): Spark 4.1's default
-      // spark.sql.unionOutputPartitioning=true lets a window/distinct
-      // above a union of co-partitioned branches skip its shuffle, and
-      // under AQE + broadcast towers the claim is not always honored by
-      // the union's actual partition layout.
-      .config("spark.sql.unionOutputPartitioning", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession(cpus.toInt, cpus.toInt, logLevel = "WARN")
     // Measurement-protocol pin (round-10 verdict #2): the 10× point
     // drifted round-over-round because fingerprint-keyed CROSS-JVM
     // artifacts (the /tmp graft_* demo indexes / sidecar copies /

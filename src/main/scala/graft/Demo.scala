@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 import graft.sources.{IndexStore, Tables}
 
 /** Runnable API sample: `runMain graft.Demo <sfDir> <indexPath>` —
@@ -11,20 +9,7 @@ object Demo {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
     val out = if (args.length > 1) args(1) else "/tmp/graft_index"
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      // Wrong-results guard (found in-round via the q206 merge law; see
-      // NswSpec "union partitioning claim"): Spark 4.1's default
-      // spark.sql.unionOutputPartitioning=true lets a window/distinct
-      // above a union of co-partitioned branches skip its shuffle, and
-      // under AQE + broadcast towers the claim is not always honored by
-      // the union's actual partition layout.
-      .config("spark.sql.unionOutputPartitioning", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession(4, 4)
 
     IndexStore.save(Tables(spark, sfDir, "documents"), out)
     val idx = IndexStore.load(spark, out)

@@ -1,37 +1,33 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
-/** Plan inspection: `runMain graft.Explain <sfDir> [query...]` prints
-  * the formatted physical plan for each named query (all if none
-  * given). Used to audit pushdown/pruning/broadcast/codegen choices —
-  * see PLANS.md for the audit notes. */
+/** Plan inspection: `runMain graft.Explain <sfDir> [query...]` prints,
+  * for each named query (all if none given), a header with the
+  * executed plan's cartesian / broadcast-nested-loop / exchange /
+  * unpartitioned-window / parquet-scan counts, then the formatted
+  * physical plan. Used to audit pushdown/pruning/broadcast/codegen
+  * choices — see PLANS.md for the audit notes. */
 object Explain {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.01")
     val names = if (args.length > 1) args.toSeq.tail else SparkEntry.queries.keys.toSeq
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      // Wrong-results guard (found in-round via the q206 merge law; see
-      // NswSpec "union partitioning claim"): Spark 4.1's default
-      // spark.sql.unionOutputPartitioning=true lets a window/distinct
-      // above a union of co-partitioned branches skip its shuffle, and
-      // under AQE + broadcast towers the claim is not always honored by
-      // the union's actual partition layout.
-      .config("spark.sql.unionOutputPartitioning", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // keep operator plans lazy — the eager result checkpoints in the
-      // dedup/ANN family would otherwise reduce `.explain` to a scan of
-      // the checkpointed RDD
-      .config("spark.graft.eagerMaterialize", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    // keep operator plans lazy — the eager result checkpoints in the
+    // dedup/ANN family would otherwise reduce `.explain` to a scan of
+    // the checkpointed RDD
+    val spark = GraftSession(4, 4,
+      extraConf = Map("spark.graft.eagerMaterialize" -> "false"))
     names.foreach { n =>
-      println(s"\n==== $n ====")
-      SparkEntry.queries(n)(spark, dir).explain("formatted")
+      val df = SparkEntry.queries(n)(spark, dir)
+      val lines = df.queryExecution.executedPlan.toString.linesIterator.toSeq
+      println(s"\n==== $n" +
+        s" cartesian=${lines.count(_.contains("CartesianProduct"))}" +
+        s" bnlj=${lines.count(_.contains("BroadcastNestedLoopJoin"))}" +
+        s" exchange=${lines.count(_.contains("Exchange"))}" +
+        s" windows=${lines.count(l => l.contains("Window") && !l.contains("partitionBy"))}" +
+        s" scans=${lines.count(_.contains("Scan parquet"))} ====")
+      df.explain("formatted")
+      // lazy mode parks its persists until released: drop them once the
+      // plan is printed, so a sweep does not pin every query's caches
+      operators.Dedup.releaseLazyHandles()
     }
     spark.stop()
   }

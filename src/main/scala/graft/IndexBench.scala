@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 import graft.operators.InvertedIndex
 import graft.sources.RawCorpus
 
@@ -22,20 +20,7 @@ object IndexBench {
     val corpusDir = args(1)
     val outDir = args(2)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // Wrong-results guard (found in-round via the q206 merge law; see
-      // NswSpec "union partitioning claim"): Spark 4.1's default
-      // spark.sql.unionOutputPartitioning=true lets a window/distinct
-      // above a union of co-partitioned branches skip its shuffle, and
-      // under AQE + broadcast towers the claim is not always honored by
-      // the union's actual partition layout.
-      .config("spark.sql.unionOutputPartitioning", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession(cpus.toInt, cpus.toInt)
     spark.range(1000000).selectExpr("sum(id)").collect() // JVM warmup
 
     val t0 = System.nanoTime()

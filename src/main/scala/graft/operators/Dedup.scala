@@ -1315,7 +1315,7 @@ object Dedup {
     } else try result.localCheckpoint(true) finally handles.foreach(_.unpersist())
 
   /** Release every persist registered while in lazy mode — for
-    * plan-audit drivers (PlanSweep, DriverContractSpec) to call after
+    * plan-audit drivers (Explain, DriverContractSpec) to call after
     * each plan capture. */
   def releaseLazyHandles(): Unit = lazyHandles.synchronized {
     lazyHandles.foreach(_.unpersist())
@@ -1864,10 +1864,6 @@ object Dedup {
       converged = nextSum == lsum
       lsum = nextSum
     }
-    // observability: rounds actually run (read back by perf probes —
-    // the near-dup graphs here are star/clique-shaped, diameter ~1-2,
-    // so the loop's cost is the per-round JOB FLOOR, not reach)
-    nodes.sparkSession.conf.set("spark.graft.cc.lastRounds", round.toString)
     sym.unpersist()
     val out = nodes.select("doc_id").distinct()
       .join(labels.select(col("doc_id"), col("label")), Seq("doc_id"), "left")

@@ -1016,7 +1016,7 @@ object Events {
     * session universe so non-converting sessions survive with NULL
     * anchors. Four consumers (three step anchors + the universe) read
     * the session assignment: persist it ONCE (the q88 discipline —
-    * PlanSweep measured 7 scans / 14 windows in the unpersisted
+    * Explain measured 7 scans / 14 windows in the unpersisted
     * form). Returns the anchor relation plus any persist handles the
     * caller must release via finishWith (lazy/plan-audit mode only;
     * the eager path checkpoints the memo leaf and releases its own).

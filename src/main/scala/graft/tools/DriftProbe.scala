@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Per-sample timing distribution probe for vs_prev drift triage.
   *
   * The round-12 vs_prev block flagged q255/q264/q267 as regressions
@@ -30,15 +28,7 @@ object DriftProbe {
       .split(",").map(_.trim).filter(_.nonEmpty).toSeq
     val unknown = names.filterNot(graft.SparkEntry.queries.contains)
     require(unknown.isEmpty, s"unknown queries: ${unknown.mkString(",")}")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.unionOutputPartitioning", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession(cpus.toInt, cpus.toInt, logLevel = "WARN")
     try graft.SparkEntry.entry(spark).count() catch { case _: Throwable => () }
     val picked = names.map(n => n -> graft.SparkEntry.queries(n))
     // per-sample (seconds, succeeded) — a FAILED sample must never

@@ -1,30 +1,16 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Runtime-plan probe: `runMain graft.tools.ExecProbe <sfDir> <query>[,<query>…]`
   * executes each named query EAGERLY (noop sink — no driver collect)
   * and then prints the FINAL adaptive plan's stage-reuse profile plus
-  * wall seconds. This is the complement of Explain/PlanSweep, which
-  * print the pre-execution plan: AQE performs exchange reuse at stage
+  * wall seconds. This is the complement of Explain, which prints
+  * the pre-execution plan: AQE performs exchange reuse at stage
   * materialization time, so duplicate-looking subtrees in the initial
   * plan can still execute once — only the post-run plan
   * (isFinalPlan=true) shows `ReusedQueryStage`/`ReusedExchange`. */
 object ExecProbe {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", 8)
-      // Wrong-results guard (found in-round via the q206 merge law; see
-      // NswSpec "union partitioning claim"): Spark 4.1's default
-      // spark.sql.unionOutputPartitioning=true lets a window/distinct
-      // above a union of co-partitioned branches skip its shuffle, and
-      // under AQE + broadcast towers the claim is not always honored by
-      // the union's actual partition layout.
-      .config("spark.sql.unionOutputPartitioning", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.GraftSession(8, 8)
     val dir = args(0)
     args(1).split(",").foreach { n =>
       // time from construction: eagerly-checkpointing operators do

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Per-query SCALING-EXPONENT measurement for the heavy dedup rows
@@ -46,21 +46,7 @@ object ScaleProbe {
 
   def main(args: Array[String]): Unit = {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", "32")
-      // Wrong-results guard (found in-round via the q206 merge law; see
-      // NswSpec "union partitioning claim"): Spark 4.1's default
-      // spark.sql.unionOutputPartitioning=true lets a window/distinct
-      // above a union of co-partitioned branches skip its shuffle, and
-      // under AQE + broadcast towers the claim is not always honored by
-      // the union's actual partition layout.
-      .config("spark.sql.unionOutputPartitioning", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.GraftSession(cpus.toInt, 32)
 
     val base = "/root/testdata/sf0.1/documents.parquet"
     val tenXPath = {

@@ -1,7 +1,6 @@
 package graft.tools
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Spill-under-pressure proof (round-6 verdict item 6): the 100 TB
@@ -32,30 +31,16 @@ object SpillProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val fraction = sys.env.getOrElse("SPARK_GRAFT_MEM_FRACTION", "0.05")
-    val spark = SparkSession.builder()
-      // TWO fat tasks, not four thin ones: per-task state is what
-      // presses the execution pool
-      .master("local[2]")
-      .config("spark.sql.shuffle.partitions", "2")
-      // Wrong-results guard (found in-round via the q206 merge law; see
-      // NswSpec "union partitioning claim"): Spark 4.1's default
-      // spark.sql.unionOutputPartitioning=true lets a window/distinct
-      // above a union of co-partitioned branches skip its shuffle, and
-      // under AQE + broadcast towers the claim is not always honored by
-      // the union's actual partition layout.
-      .config("spark.sql.unionOutputPartitioning", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
+    // TWO fat tasks, not four thin ones: per-task state is what
+    // presses the execution pool
+    val spark = graft.GraftSession(2, 2, extraConf = Map(
       // the PRESSURE: execution+storage get `fraction` of the (already
       // small) heap instead of the default 60%
-      .config("spark.memory.fraction", fraction)
+      "spark.memory.fraction" -> fraction,
       // no broadcast escape hatch — the join must shuffle both sides
       // and merge under pressure
-      .config("spark.sql.autoBroadcastJoinThreshold", "-1")
-      .config("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+      "spark.sql.autoBroadcastJoinThreshold" -> "-1",
+      "spark.sql.adaptive.autoBroadcastJoinThreshold" -> "-1"))
 
     val mem = new java.util.concurrent.atomic.AtomicLong
     val disk = new java.util.concurrent.atomic.AtomicLong

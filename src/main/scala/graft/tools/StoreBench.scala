@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Prices the PRODUCTION path of the incremental families beside
@@ -56,17 +56,7 @@ object StoreBench {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val runs = sys.env.getOrElse("SPARK_GRAFT_STOREBENCH_RUNS", "3").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", "32")
-      // the suite-wide wrong-results guard (NswSpec "union
-      // partitioning claim")
-      .config("spark.sql.unionOutputPartitioning", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.GraftSession(cpus.toInt, 32)
 
     val docs = spark.read.parquet(s"$sfDir/documents.parquet")
     val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
