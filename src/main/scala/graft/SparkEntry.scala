@@ -1512,8 +1512,9 @@ object SparkEntry {
   /** DuckDB mirror of Similarity.lshBucket: per-plane sign bit of the
     * weighted sum, weights interpolated from Hashing.planeWeight. */
   /** One sign-bit fold generator for any plane RANGE — the SQL twin
-    * of `Similarity.lshBucketRange`, so both families (and any future
-    * one) share a single definition on both engines. */
+    * of the `LshBucket` kernel's `(from, until)` range, so both
+    * families (and any future one) share a single definition on both
+    * engines. */
   private def lshBucketSqlRange(from: Int, until: Int): String =
     (from until until).map { p =>
       val w = (0 until 64).map(d => Hashing.planeWeight(p, d)).mkString("[", ",", "]")

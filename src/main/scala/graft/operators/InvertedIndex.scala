@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -349,58 +349,86 @@ object InvertedIndex {
     * Sparck-Jones form, always positive), and the global top-`topK`
     * is returned.
     *
-    * One tokenize pass and one doc_id shuffle feed everything: per-doc
-    * length (dl) and the per-term frequencies ride the SAME
-    * aggregation (tf per term as a conditional sum — the bounded term
-    * set becomes columns, re-exploded after), and df is a count over
-    * the tf relation itself (no second corpus scan).
-    * N/avgdl ride a broadcast one-row frame. Cross-engine exactness:
-    * each TERM's score is floor-quantized to integer millionths
-    * BEFORE the per-doc sum (the q88 rule — integer sums are
-    * order-independent where float sums are not), and the final
-    * ordering tie-breaks on doc_id. Scale: nothing corpus-sized is
-    * broadcast; the top-k is a TakeOrdered, not a full sort. */
-  /** Session memo of the per-doc BM25 score relation (doc_id, score_q)
-    * for a given (terms, k1, b) — round-14 optimization: q99's ranked
-    * retrieval and q103's RRF fusion score the SAME query against the
-    * same corpus and differ only in the top-k cut, so the scoring
-    * tower (tokenize + fused dl/tf aggregation + df join) builds once
-    * per session and each consumer pays only its own TakeOrdered.
-    * Lazy (plan-audit) mode keeps the per-call tower. */
+    * Everything that does not depend on the query is one session tower
+    * per corpus ([[Bm25Corpus]]): the `(doc_id, word, tf, dl, df)`
+    * relation, derived from the shared `tf` tower and held as one row
+    * per document, plus the scalars N and avgdl. A query is then one
+    * pass over that tower — pick each query term's `(tf, df)` out of
+    * the row, score it, sum the terms of the row — and a TakeOrdered:
+    * no exchange, and every distinct term set shares one tower, so the
+    * memory held does not grow with the number of queries.
+    * Cross-engine exactness: each TERM's score is floor-quantized to
+    * integer millionths BEFORE the per-doc sum (the q88 rule — integer
+    * sums are order-independent where float sums are not), tf/dl/df
+    * and N are integers and avgdl an exact double sum of integers, and
+    * the final ordering tie-breaks on doc_id. Lazy (plan-audit) mode
+    * keeps the whole per-call plan ([[bm25DocScores]]). */
   def bm25Search(docs: DataFrame, rawTerms: Seq[String], topK: Int,
-      k1: Double = 1.2, b: Double = 0.75): DataFrame =
-    // keyed on the term SET as a sorted list: a joined-string key
-    // needs a delimiter no term can contain, and scores do not depend
-    // on term order, so a permuted query hits the same tower. Growth
-    // bound: each distinct (terms, k1, b) pins one corpus-row-sized
-    // leaf for the session - a long-lived driver serving an UNBOUNDED
-    // ad-hoc query stream must call Memos.clearAll periodically (the
-    // suite's workload is two fixed queries).
-    graft.tools.Memos.get("bm25", docs,
-      (rawTerms.distinct.sorted,
-        math.round(k1 * 1e6), math.round(b * 1e6)))(
-      bm25DocScores(docs, rawTerms, k1, b).localCheckpoint(true))(
-      bm25DocScores(docs, rawTerms, k1, b))
-      .orderBy(col("score_q").desc, col("doc_id").asc)
-      .limit(topK)
-
-  /** The scoring tower shared by every top-k cut — see [[bm25Search]]
-    * scaladoc above for the algebra. */
-  private def bm25DocScores(docs: DataFrame, rawTerms: Seq[String],
-      k1: Double, b: Double): DataFrame = {
-    // dedup query terms at entry: a repeated term would become two tf
-    // columns and two explode rows — inflating df and double-counting
-    // its score — while the oracle's `WHERE word IN (...) GROUP BY
-    // word` naturally dedups (and BM25 scores a term set)
+      k1: Double = 1.2, b: Double = 0.75): DataFrame = {
+    // a repeated term must not count twice: BM25 scores a term SET, as
+    // the oracle's `WHERE word IN (...) GROUP BY word` does
     val terms = rawTerms.distinct
+    val scores =
+      if (!Dedup.eagerMaterialize(docs)) bm25DocScores(docs, terms, k1, b)
+      else {
+        val c = graft.tools.Memos.get("bm25", docs, ())(bm25Corpus(docs))(
+          sys.error("bm25Search lazy path keeps the per-call plan"))
+        if (terms.isEmpty) c.perDoc.where(lit(false)).select(col("doc_id"), lit(0L).as("score_q"))
+        else {
+          val hits = terms.map(t => col("terms").getItem(t))
+          c.perDoc.where(hits.map(_.isNotNull).reduce(_ || _))
+            .select(col("doc_id"), hits.map(h => coalesce(
+              bm25TermScoreQ(h.getField("tf"), col("dl"), h.getField("df"),
+                lit(c.nDocs), lit(c.avgdl), k1, b), lit(0L))).reduce(_ + _)
+              .as("score_q"))
+        }
+      }
+    scores.orderBy(col("score_q").desc, col("doc_id").asc).limit(topK)
+  }
+
+  /** The query-independent BM25 tower of one corpus: `perDoc` is one
+    * row per tokenized document, `(doc_id, dl, terms: word → (tf,
+    * df))`; `nDocs` counts every document and `avgdl` averages `dl`
+    * over the tokenized ones only (as the oracle's `dl` CTE does). */
+  private case class Bm25Corpus(perDoc: DataFrame, nDocs: Long, avgdl: Double)
+
+  private def bm25Corpus(docs: DataFrame): Bm25Corpus = {
+    val tf = TextAnalysis.docTermFreq(docs)._1
+    val df = tf.groupBy("word").agg(count(lit(1)).as("df"))
+    val perDoc = graft.tools.Memos.checkpointWide(tf.join(df, "word")
+      .groupBy("doc_id")
+      .agg(sum(col("tf")).as("dl"), map_from_entries(collect_list(struct(
+        col("word"), struct(col("tf"), col("df"))))).as("terms")))
+    // a long sum of integers, divided once: the same double as a
+    // double-accumulated avg while the token count stays below 2^53
+    val s = perDoc.agg(sum(col("dl")), count(lit(1))).head()
+    val avgdl = if (s.getLong(1) == 0L) 0.0 else s.getLong(0).toDouble / s.getLong(1)
+    Bm25Corpus(perDoc, docs.count(), avgdl)
+  }
+
+  /** One term's floor-quantized score — the one definition the tower
+    * path and the per-call plan share. */
+  private def bm25TermScoreQ(tf: Column, dl: Column, df: Column, nDocs: Column,
+      avgdl: Column, k1: Double, b: Double): Column = {
+    val idf = log((nDocs - df + 0.5) / (df + 0.5) + 1.0)
+    // association shape mirrors the oracle SQL exactly; the two
+    // factor swaps ((dl·b) for (b·dl), (…)·k1 for k1·(…)) are
+    // bit-exact under IEEE multiply commutativity
+    floor(idf * (tf * (k1 + 1.0)) / (tf + (lit(1.0 - b) + dl * b / avgdl) * k1) * 1e6)
+      .cast("long")
+  }
+
+  /** The per-call scoring plan of lazy (plan-audit) mode — the same
+    * algebra as the tower path, over the query's terms only. */
+  private def bm25DocScores(docs: DataFrame, terms: Seq[String],
+      k1: Double, b: Double): DataFrame = {
     // ONE tokenize pass and ONE doc_id shuffle produce BOTH the doc
     // length and the per-term frequencies (dl as count(*), each term's
     // tf as a conditional sum in the same aggregation — the q22
     // fused-relation idea); the (doc_id, word, tf) shape is then
     // re-derived by exploding the bounded term columns, and df/avgdl
     // are aggregates OVER THE AGGREGATED frame, whose doc_id exchange
-    // Catalyst reuses. Round-4 review: the previous dl/tf towers each
-    // re-tokenized the corpus.
+    // Catalyst reuses.
     val tfCols = terms.zipWithIndex.map { case (t, i) =>
       sum(when(col("word") === t, 1L).otherwise(0L)).as(s"tf_$i")
     }
@@ -415,20 +443,12 @@ object InvertedIndex {
     val df = tf.groupBy("word").agg(count(lit(1)).as("df"))
     val nDocs = docs.agg(count(lit(1)).as("n_docs"))
     val avgdl = perDoc.agg(avg(col("dl")).as("avgdl"))
-    val scored = tf
-      .join(df, "word")
+    tf.join(df, "word")
       .crossJoin(broadcast(nDocs))
       .crossJoin(broadcast(avgdl))
-      .withColumn("idf",
-        log((col("n_docs") - col("df") + 0.5) / (col("df") + 0.5) + 1.0))
-      // association shape mirrors the oracle SQL exactly; the two
-      // factor swaps ((dl·b) for (b·dl), (…)·k1 for k1·(…)) are
-      // bit-exact under IEEE multiply commutativity
-      .withColumn("term_score",
-        col("idf") * (col("tf") * (k1 + 1.0)) /
-          (col("tf") + (lit(1.0 - b) + col("dl") * b / col("avgdl")) * k1))
-      .withColumn("ts_q", floor(col("term_score") * 1e6).cast("long"))
-    scored.groupBy("doc_id")
+      .select(col("doc_id"), bm25TermScoreQ(col("tf"), col("dl"), col("df"),
+        col("n_docs"), col("avgdl"), k1, b).as("ts_q"))
+      .groupBy("doc_id")
       .agg(sum(col("ts_q")).as("score_q"))
   }
 

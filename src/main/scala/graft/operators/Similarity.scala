@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-import graft.functions.{DotProductDouble, Hashing}
+import graft.functions.{DotProductDouble, Hashing, LshBucket}
 import graft.tools.Memos
 
 /** Similarity search over the `embeddings` table (ARRAY<FLOAT>, dim 64)
@@ -80,23 +80,12 @@ object Similarity {
   }
 
   /** Sign-bit bucket id from Hashing's deterministic hyperplane
-    * lattice: bit p = sign(Σ_d w(p,d)·v_d). `dim` must match the
-    * embedding width — zip_with null-pads a mismatch, which would
-    * silently send every vector to bucket 0. */
-  /** Sign-bit fold over one plane RANGE — the single definition both
-    * families share (an edit to the bucket fold reaches every
-    * consumer; the q205 oracle generator mirrors the same range
-    * parameterization). */
-  private def lshBucketRange(v: Column, dim: Int, from: Int,
-      until: Int): Column =
-    (from until until).map { p =>
-      val w = array((0 until dim).map(d =>
-        lit(Hashing.planeWeight(p, d).toDouble)): _*)
-      when(dot(v, w) > 0, lit(1L << (p - from))).otherwise(lit(0L))
-    }.reduce(_ + _)
-
+    * lattice: bit p = sign(Σ_d w(p,d)·v_d), one codegen'd
+    * `LshBucket` kernel per family (the q205 oracle generator mirrors
+    * the same plane-range parameterization). `dim` must match the
+    * embedding width — a mismatch folds a prefix of the vector. */
   private[operators] def lshBucket(v: Column, dim: Int): Column =
-    lshBucketRange(v, dim, 0, Hashing.NumPlanes)
+    LshBucket(v, 0, Hashing.NumPlanes, dim)
 
   /** A second independent hyperplane family: `Hashing.planeWeight`'s
     * lattice repeats with period 17 in the plane index, so planes
@@ -104,7 +93,7 @@ object Similarity {
     * would start aliasing — two is the safe maximum on this lattice).
     */
   private def lshBucket2(v: Column, dim: Int): Column =
-    lshBucketRange(v, dim, Hashing.NumPlanes, 2 * Hashing.NumPlanes)
+    LshBucket(v, Hashing.NumPlanes, 2 * Hashing.NumPlanes, dim)
 
   /** Graph-based ANN (round-7 "What's missing" #4): a deterministic
     * single-layer NAVIGABLE-SMALL-WORLD graph (Malkov et al.'s NSW —
@@ -576,10 +565,18 @@ object Similarity {
       .withColumn("nrm_b", sqrt(dot(col("vb"), col("vb"))))
     val w = Window.partitionBy(col("vec_a"))
       .orderBy(col("cos6").desc, col("vec_b").asc)
+    // one exchange to a single partition serves both the per-query
+    // window and the final order: the candidates of a bounded query set
+    // are few (each query meets one bucket), so after the candidate
+    // stage (scan, join, cosine — every split) the rest is one task.
+    // A hash exchange for the window plus a range exchange for the sort
+    // cost three jobs; a range exchange alone samples — re-reads — the
+    // candidate stage.
     broadcast(q).join(c, Seq("bucket"))
       .where(col("vec_a") =!= col("vec_b"))
       .withColumn("cos", dot(col("va"), col("vb")) / (col("nrm_a") * col("nrm_b")))
       .withColumn("cos6", round(col("cos"), 6))
+      .repartition(1)
       .withColumn("rnk", row_number().over(w).cast("long"))
       .where(col("rnk") <= k)
       .select(col("vec_a"), col("vec_b"), col("bucket"),

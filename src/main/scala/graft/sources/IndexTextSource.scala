@@ -38,10 +38,13 @@ import org.apache.spark.unsafe.types.UTF8String
   *    `select(word, df)` never materializes the posting arrays — for a
   *    common word at corpus scale that array IS the row's cost; the
   *    reader counts ids without building them.
-  *  - '''Split-level parallelism''': one `InputPartition` per FILE, not
-  *    per letter — a production index shards each letter bucket into
-  *    many files (the writer's `repartition` controls how many), so
-  *    scan parallelism scales with the artifact, not the alphabet.
+  *  - '''Byte-sized splits''': the planned files are bin-packed into
+  *    splits by Spark's own file-source rule (`FilePartition`: a split
+  *    target from `spark.sql.files.maxPartitionBytes`,
+  *    `openCostInBytes` and the leaf parallelism), so a scan pays one
+  *    task per core-sized slice of bytes — 26 small letter files are a
+  *    few tasks, a production index sharded into many large files
+  *    still spreads over every core.
   *
   * Pushed word predicates are ALSO evaluated row-level in the reader
   * (cheap string compares, before any posting parse); Spark re-applies
@@ -250,6 +253,29 @@ object IndexTextSource {
         .map(f => IndexFilePartition(f.getPath.toString, f.getLen))
       (planned, byLetter.map(_._2.length).sum)
     }
+  }
+
+  /** Bin-pack files into multi-file splits with Spark's file-source
+    * rule: `FilePartition.maxSplitBytes` (min of maxPartitionBytes and
+    * the bytes per leaf-parallelism slot, each file charged
+    * `openCostInBytes` extra) and `getFilePartitions`' next fit over
+    * the files largest first — the packing `FileSourceScanExec` gives
+    * parquet, so a store of many small letter files runs a few tasks
+    * rather than one per file. Files are never split: the grammar is
+    * line-oriented and the (top-)N check is per file. */
+  private[sources] def packFiles(
+      files: Array[IndexFilePartition]): Array[IndexFilesPartition] = {
+    import org.apache.spark.paths.SparkPath
+    import org.apache.spark.sql.execution.datasources.{FilePartition, PartitionedFile}
+    val spark = org.apache.spark.sql.SparkSession.active
+    val openCost = spark.sessionState.conf.filesOpenCostInBytes
+    val maxSplit = FilePartition.maxSplitBytes(spark, files.map(_.len + openCost).sum)
+    val byPath = files.map(f => SparkPath.fromPathString(f.file) -> f).toMap
+    val sparkFiles = files.sortBy(-_.len).toSeq.map(f =>
+      PartitionedFile(InternalRow.empty, SparkPath.fromPathString(f.file), 0L, f.len))
+    FilePartition.getFilePartitions(spark, sparkFiles, maxSplit)
+      .map(p => IndexFilesPartition(p.files.toSeq.map(pf => byPath(pf.filePath))))
+      .toArray
   }
 
   /** Does a pushed V2 top-N ordering match the artifact's OWN on-disk
@@ -532,9 +558,10 @@ private[graft] class IndexTextScan(path: String, val pushed: Array[Filter],
     with SupportsReportPartitioning {
 
   /** The artifact's layout, DECLARED (`SupportsReportPartitioning`):
-    * rows are key-grouped by the `_letter` metadata column (each split
-    * is one file under one `letter=` directory — [[IndexFilePartition]]
-    * carries the key via `HasPartitionKey`). When a query reads
+    * rows are key-grouped by the `_letter` metadata column (a scan
+    * serving `_letter` plans each file as its own split under one
+    * `letter=` directory — [[IndexFilePartition]] carries the key via
+    * `HasPartitionKey`). When a query reads
     * `_letter` and `spark.sql.sources.v2.bucketing.enabled` is on,
     * Spark groups same-letter splits and plans per-letter
     * aggregations/joins with NO Exchange — storage-partitioned
@@ -594,20 +621,13 @@ private[graft] class IndexTextScan(path: String, val pushed: Array[Filter],
     * be chosen as a broadcast side — with it, `index ⋈ corpus` joins
     * broadcast the pruned index automatically (spec-pinned). */
   override def estimateStatistics(): Statistics = new Statistics {
-    private lazy val bytes: Long = planInputPartitions()
-      .map(_.asInstanceOf[IndexFilePartition].len).sum
+    private lazy val bytes: Long = plannedFiles.map(_.len).sum
     override def sizeInBytes(): java.util.OptionalLong =
       java.util.OptionalLong.of(bytes)
     override def numRows(): java.util.OptionalLong =
       java.util.OptionalLong.empty()
   }
 
-  /** List the artifact's files, pruned to the letters the pushed
-    * predicates allow — the planning-time 1/26th (or 2/26th, …) cut.
-    * One InputPartition per file: parallelism follows the artifact's
-    * sharding. Driver-side cost is one directory listing, same as any
-    * file source (at real scale this listing comes from a manifest /
-    * catalog, which is exactly the reference's manifest role). */
   /** One directory walk per filter state: `estimateStatistics` and the
     * planner may each call `planInputPartitions` during a single plan
     * (expensive listing on object stores); the cache is keyed by the
@@ -615,7 +635,12 @@ private[graft] class IndexTextScan(path: String, val pushed: Array[Filter],
   @volatile private var listingCache
       : Option[(Option[Set[String]], Array[IndexFilePartition], Int)] = None
 
-  override def planInputPartitions(): Array[InputPartition] = {
+  /** The artifact's files pruned to the letters the pushed and runtime
+    * predicates allow — the planning-time 1/26th (or 2/26th, …) cut.
+    * Driver-side cost is one directory listing, same as any file
+    * source (at real scale this listing comes from a manifest /
+    * catalog, which is exactly the reference's manifest role). */
+  private[graft] def plannedFiles: Array[IndexFilePartition] = {
     val allowed = IndexTextSource.lettersOf(effective)
     val (planned, total) = listingCache match {
       case Some((k, p, t)) if k == allowed => (p, t)
@@ -626,8 +651,18 @@ private[graft] class IndexTextScan(path: String, val pushed: Array[Filter],
     }
     plannedCount = planned.length
     prunedCount = total - planned.length
-    planned.map(p => p: InputPartition)
+    planned
   }
+
+  /** Planned files bin-packed into byte-sized splits
+    * ([[IndexTextSource.packFiles]]), except where a split must be one
+    * file: a scan serving `_letter` reports key-grouped partitioning,
+    * which needs each split's `HasPartitionKey`, and the pushed
+    * `COUNT(*)` reader emits one partial row per file. */
+  override def planInputPartitions(): Array[InputPartition] =
+    if (countStar || readSchema().fieldNames.contains(IndexTextSource.LetterCol))
+      plannedFiles.map(p => p: InputPartition)
+    else IndexTextSource.packFiles(plannedFiles).map(p => p: InputPartition)
 
   @volatile private var plannedCount = 0L
   @volatile private var prunedCount = 0L
@@ -733,7 +768,8 @@ private[graft] object IndexTextScan {
     StructField("count(*)", LongType, nullable = false)))
 }
 
-/** One artifact file = one split. `HasPartitionKey` exposes the file's
+/** One artifact file, as a split of its own or as a member of an
+  * [[IndexFilesPartition]]. `HasPartitionKey` exposes the file's
   * letter bucket as its partition key, which is what lets Spark GROUP
   * same-letter files into key-grouped partitions (storage-partitioned
   * execution) when the scan also reports `KeyGroupedPartitioning` —
@@ -743,6 +779,11 @@ private[graft] case class IndexFilePartition(file: String, len: Long)
   override def partitionKey(): InternalRow =
     InternalRow(UTF8String.fromString(IndexTextSource.letterOfFile(file)))
 }
+
+/** A bin-packed split of several artifact files, read one after the
+  * other ([[IndexTextSource.packFiles]]). */
+private[graft] case class IndexFilesPartition(files: Seq[IndexFilePartition])
+    extends InputPartition
 
 /** COUNT(*) pushdown reader: one row per file — the grammar-line
   * count — with no word materialization and no posting parse. With
@@ -797,10 +838,45 @@ private[graft] class IndexTextReaderFactory(pushed: Array[Filter],
     orderedLimit: Boolean = false,
     hadoopConf: Option[org.apache.spark.util.SerializableConfiguration] = None)
     extends PartitionReaderFactory {
+  private def open(p: IndexFilePartition): PartitionReader[InternalRow] =
+    new IndexTextPartitionReader(p.file, pushed, requiredSchema, limit,
+      orderedLimit, hadoopConf)
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
-    new IndexTextPartitionReader(
-      partition.asInstanceOf[IndexFilePartition].file, pushed, requiredSchema,
-      limit, orderedLimit, hadoopConf)
+    partition match {
+      case IndexFilesPartition(files) => new ChainedPartitionReader(files, open)
+      case p: IndexFilePartition => open(p)
+    }
+}
+
+/** Reads a packed split's files in order, one per-file reader at a
+  * time, each opened only when the previous one is exhausted — so each
+  * file keeps its own pushed (top-)N limit and `df↓ word↑` check. Task
+  * metrics are summed over the files by name. */
+private[graft] class ChainedPartitionReader(files: Seq[IndexFilePartition],
+    open: IndexFilePartition => PartitionReader[InternalRow])
+    extends PartitionReader[InternalRow] {
+  private val pending = files.iterator
+  private var current: PartitionReader[InternalRow] = null
+  private val finished = scala.collection.mutable.Map.empty[String, Long]
+
+  override def next(): Boolean = {
+    while (current != null || pending.hasNext) {
+      if (current == null) current = open(pending.next())
+      if (current.next()) return true
+      current.currentMetricsValues().foreach(m =>
+        finished(m.name()) = finished.getOrElse(m.name(), 0L) + m.value())
+      current.close()
+      current = null
+    }
+    false
+  }
+  override def get(): InternalRow = current.get()
+  override def currentMetricsValues(): Array[CustomTaskMetric] =
+    (finished.toSeq ++ Option(current).toSeq.flatMap(
+      _.currentMetricsValues().map(m => m.name() -> m.value())))
+      .groupMapReduce(_._1)(_._2)(_ + _)
+      .map { case (n, v) => IndexMetrics.Task(n, v): CustomTaskMetric }.toArray
+  override def close(): Unit = if (current != null) current.close()
 }
 
 /** Streams one index file line-by-line: parse the word, row-filter on

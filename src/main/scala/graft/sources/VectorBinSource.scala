@@ -174,13 +174,26 @@ private[graft] class VectorBinScan(path: String, val pushed: Array[Filter],
   override def description(): String =
     s"graft-vectors $path, PushedFilters: [${pushed.mkString(", ")}]"
 
+  /** One walk of the `bucket=` directories per filter state: planning,
+    * statistics and the runtime-filter re-plan each call
+    * `planInputPartitions`; keyed by the allowed-bucket set, so a
+    * runtime filter still re-plans (the `graft-index` listing cache). */
+  @volatile private var listingCache
+      : Option[(Option[Set[Long]], Array[InputPartition])] = None
+
   override def planInputPartitions(): Array[InputPartition] = {
     val allowed = VectorBinSource.allowedBuckets(
       (pushed ++ runtime).toIndexedSeq)
-    VectorBinSource.listFiles(path)
-      .filter { case (b, _, _) => allowed.forall(_.contains(b)) }
-      .map { case (b, f, len) => VectorFilePartition(b, f, len): InputPartition }
-      .toArray
+    listingCache match {
+      case Some((k, parts)) if k == allowed => parts
+      case _ =>
+        val parts = VectorBinSource.listFiles(path)
+          .filter { case (b, _, _) => allowed.forall(_.contains(b)) }
+          .map { case (b, f, len) => VectorFilePartition(b, f, len): InputPartition }
+          .toArray
+        listingCache = Some((allowed, parts))
+        parts
+    }
   }
 
   override def createReaderFactory(): PartitionReaderFactory =

@@ -4,7 +4,7 @@ import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
 import org.apache.spark.sql.functions._
 
 import graft.operators.InvertedIndex
-import graft.sources.{IndexStore, IndexTextScan, IndexTextSource}
+import graft.sources.{IndexFilePartition, IndexFilesPartition, IndexStore, IndexTextScan, IndexTextSource}
 
 /** The custom DSv2 source over the persisted R16 text index
   * (graft.sources.IndexTextSource): correctness vs the DataFrame path,
@@ -81,8 +81,8 @@ class DataSourceV2Spec extends SparkSpec {
   }
 
   test("an unconstrained scan plans every letter's files") {
-    val parts = scanOf(table).planInputPartitions()
-    val letters = parts.map(_.toString.replaceAll(".*letter=(.).*", "$1")).toSet
+    val files = scanOf(table).plannedFiles
+    val letters = files.map(_.file.replaceAll(".*letter=(.).*", "$1")).toSet
     // sf0.001 vocabulary covers most letters; at minimum it is >> 2
     assert(letters.size > 10, s"suspiciously few letters: $letters")
   }
@@ -381,8 +381,8 @@ class DataSourceV2Spec extends SparkSpec {
       assert(scan.runtimeFilters.nonEmpty,
         "the dim's word set never reached the scan at run time")
       // files planned after the runtime IN-set < the full artifact
-      val pruned = scan.planInputPartitions().length
-      val full = scanOf(table).planInputPartitions().length
+      val pruned = scan.plannedFiles.length
+      val full = scanOf(table).plannedFiles.length
       assert(pruned < full, s"no file pruning: $pruned of $full")
       // and the result is the plain join's answer
       val expect = InvertedIndex.postingsUnordered(docs)
@@ -522,5 +522,81 @@ class DataSourceV2Spec extends SparkSpec {
     spark.sql(s"DELETE FROM $tbl WHERE df > 2")
     assert(IndexStore.readIndexTable(spark, dir)
       .select("word").collect().map(_.getString(0)).toSet === survivors)
+  }
+
+  /** `body` with every planned file in a split of its own: a one-byte
+    * split target closes each split after its first file. */
+  private def oneFilePerSplit[T](body: => T): T = {
+    spark.conf.set("spark.sql.files.maxPartitionBytes", "1")
+    try body finally spark.conf.unset("spark.sql.files.maxPartitionBytes")
+  }
+
+  test("packed splits ≡ one file per split, row for row") {
+    // a fresh frame per run: a frame's physical plan (and its splits)
+    // is planned once
+    val queries = Seq[(String, () => org.apache.spark.sql.DataFrame, Boolean)](
+      ("full scan", () => table.select("word", "df", "postings"), false),
+      ("pushed top-N", () => table.select("word", "df")
+        .orderBy(col("df").desc, col("word").asc).limit(25), true),
+      ("word filter", () => table.where(col("word").isin("batch", "spark", "scan"))
+        .select("word", "df", "postings"), false),
+      ("COUNT(*)", () => table.agg(count(lit(1))), true))
+    queries.foreach { case (what, q, ordered) =>
+      def rows = {
+        val r = q().collect().map(_.toString).toList
+        if (ordered) r else r.sorted
+      }
+      val packed = rows
+      val single = oneFilePerSplit(rows)
+      assert(packed.nonEmpty, what)
+      assert(packed === single, what)
+    }
+    // the packing happened: fewer splits than files, and the one-byte
+    // target plans exactly one split per file
+    val scan = scanOf(table.select("word", "df"))
+    assert(scan.planInputPartitions().length < scan.plannedFiles.length)
+    assert(scan.planInputPartitions().forall(_.isInstanceOf[IndexFilesPartition]))
+    assert(oneFilePerSplit(scan.planInputPartitions()).length ===
+      scan.plannedFiles.length)
+    // COUNT(*) reads one partial row per file, never a packed split
+    val countScan = scanOf(table.agg(count(lit(1))))
+    assert(countScan.planInputPartitions().forall(_.isInstanceOf[IndexFilePartition]))
+  }
+
+  test("top-N order verification still fails inside a packed split") {
+    val bad = java.nio.file.Files.createTempDirectory("graft_badpack").toString
+    def write(letter: String, body: String) = {
+      val dir = new java.io.File(s"$bad/letter=$letter"); dir.mkdirs()
+      java.nio.file.Files.writeString(
+        java.nio.file.Paths.get(dir.getPath, "part-00000.txt"), body)
+    }
+    // enough well-sorted letters that Spark's rule packs several files
+    // per split, plus one mis-sorted under the marker: 'ant' (df=1)
+    // before 'aardvark' (df=2)
+    ('b' to 'h').foreach(l => write(l.toString, s"${l}x:[1 2 3]\n${l}y:[4]\n"))
+    write("a", "ant:[3]\naardvark:[1 2]\n")
+    java.nio.file.Files.createFile(java.nio.file.Paths.get(bad, "_GRAFT_SORTED"))
+    val t = spark.read.format("graft-index").load(bad)
+    val q = t.select("word", "df").orderBy(col("df").desc).limit(3)
+    val withA = scanOf(q).planInputPartitions().collect {
+      case IndexFilesPartition(files) if files.exists(_.file.contains("letter=a")) => files
+    }
+    assert(withA.length === 1 && withA.head.length > 1,
+      s"the mis-sorted file is not in a packed split: ${withA.mkString(", ")}")
+    val e = intercept[Exception](q.collect())
+    def chain(t: Throwable): List[Throwable] =
+      Option(t).map(x => x :: chain(x.getCause)).getOrElse(Nil)
+    assert(chain(e).exists(c =>
+      Option(c.getMessage).exists(_.contains("violates the df desc"))),
+      s"unexpected failure: $e")
+  }
+
+  test("scans serving _letter stay key-grouped: one file per split") {
+    val scan = scanOf(table.select(col("_letter"), col("word")))
+    assert(scan.outputPartitioning().isInstanceOf[
+      org.apache.spark.sql.connector.read.partitioning.KeyGroupedPartitioning])
+    val parts = scan.planInputPartitions()
+    assert(parts.length === scan.plannedFiles.length)
+    assert(parts.forall(_.isInstanceOf[IndexFilePartition]))
   }
 }

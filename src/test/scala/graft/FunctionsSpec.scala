@@ -121,6 +121,51 @@ class FunctionsSpec extends SparkSpec {
     }
   }
 
+  test("lsh_bucket: bit-identical to the CASE-tree sign-bit sum, both families") {
+    import graft.functions.{DotProductDouble, Hashing, LshBucket}
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.functions._
+    import org.apache.spark.sql.types._
+    val dim = 64
+    // the form the kernel replaced: one CASE WHEN per plane over a
+    // literal weight array, the bits summed
+    def caseTree(v: org.apache.spark.sql.Column, from: Int, until: Int) =
+      (from until until).map { p =>
+        val w = array((0 until dim).map(d => lit(Hashing.planeWeight(p, d).toDouble)): _*)
+        when(DotProductDouble(v, w) > 0, lit(1L << (p - from))).otherwise(lit(0L))
+      }.reduce(_ + _)
+    val rnd = new scala.util.Random(20261019L)
+    val seeded = (1 to 200).map(_ => Array.fill(dim)(rnd.nextGaussian()))
+    // a dot product of exactly 0 on plane p: v_a = w(p,b), v_b = -w(p,a)
+    def zeroOn(p: Int) = {
+      val v = Array.fill(dim)(0.0)
+      v(0) = Hashing.planeWeight(p, 1).toDouble
+      v(1) = -Hashing.planeWeight(p, 0).toDouble
+      v
+    }
+    val vecs = seeded ++ Seq(Array.fill(dim)(0.0), zeroOn(0), zeroOn(Hashing.NumPlanes))
+    val rows = vecs.zipWithIndex.map { case (v, i) => Row(i.toLong, v.toSeq) } :+
+      Row(-1L, null)
+    val df = spark.createDataFrame(spark.sparkContext.parallelize(rows, 3),
+      StructType(Seq(StructField("id", LongType),
+        StructField("v", ArrayType(DoubleType, containsNull = false)))))
+    val families = Seq(0 -> Hashing.NumPlanes, Hashing.NumPlanes -> 2 * Hashing.NumPlanes)
+    // generated code and the interpreted path both
+    Seq("CODEGEN_ONLY", "NO_CODEGEN").foreach { mode =>
+      spark.conf.set("spark.sql.codegen.factoryMode", mode)
+      try families.foreach { case (from, until) =>
+        val got = df.select(col("id"), LshBucket(col("v"), from, until, dim).as("k"),
+          caseTree(col("v"), from, until).as("ref")).collect()
+        assert(got.length === vecs.length + 1)
+        got.foreach(r => assert(r.getLong(1) === r.getLong(2),
+          s"$mode planes [$from, $until) id ${r.getLong(0)}"))
+        assert(got.find(_.getLong(0) == -1L).get.getLong(1) === 0L,
+          "a null vector must map to bucket 0")
+        assert(got.map(_.getLong(1)).distinct.length > 16, "degenerate buckets")
+      } finally spark.conf.unset("spark.sql.codegen.factoryMode")
+    }
+  }
+
   test("poly_hash: codegen'd expression ≡ the HOF fold spec, incl. non-ASCII fallback") {
     import graft.functions.TextFns
     import org.apache.spark.sql.functions.col

@@ -59,18 +59,38 @@ class RetrievalSpec extends SparkSpec {
     assert(InvertedIndex.bm25Search(empty, Seq("spark"), 5).isEmpty)
   }
 
-  test("bm25: a permuted term list serves the same rows from the same tower") {
+  test("bm25: distinct term sets and a permutation share one corpus tower") {
     Memos.clearAll()
     def ranked(terms: String*) = InvertedIndex.bm25Search(corpus, terms, 10)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toList
     val sc = spark.sparkContext
     val first = ranked("spark", "join", "batch")
     val pinned = sc.getPersistentRDDs.keySet
+    ranked("spark")
+    ranked("window", "fox")
+    ranked("merge", "sort", "quick")
     assert(ranked("batch", "spark", "join", "spark") === first)
     assert((sc.getPersistentRDDs.keySet -- pinned).isEmpty,
-      "the permuted query rebuilt the scoring tower")
+      "a later query pinned a tower of its own")
     assert(Memos.names.count(_ == "bm25") === 1)
     Memos.clearAll()
+  }
+
+  test("bm25: the corpus tower ≡ the lazy per-call plan, row for row") {
+    val empty = Seq.empty[(Long, String)].toDF("doc_id", "text")
+    def rows(docs: DataFrame, terms: Seq[String]) =
+      InvertedIndex.bm25Search(docs, terms, 10)
+        .collect().map(r => (r.getLong(0), r.getLong(1))).toList
+    val cases = Seq(
+      corpus -> Seq("spark", "batch", "spark"), // a repeated term
+      corpus -> Seq("absent", "join"),          // an absent term
+      empty -> Seq("spark"))                    // the empty corpus
+    val eager = cases.map { case (d, t) => rows(d, t) }
+    spark.conf.set("spark.graft.eagerMaterialize", "false")
+    val lazyRows = try cases.map { case (d, t) => rows(d, t) }
+      finally spark.conf.set("spark.graft.eagerMaterialize", "true")
+    assert(eager === lazyRows)
+    assert(eager(0).nonEmpty && eager(1).nonEmpty && eager(2).isEmpty)
   }
 
   test("bm25 is partitioning-invariant (quantized integer term sums)") {
