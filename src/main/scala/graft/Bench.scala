@@ -35,6 +35,26 @@ object Bench {
     }
   }
 
+  /** One interleaved pass: run each query's action once, keeping the
+    * per-query minimum in `best`. A query that throws joins `failed`
+    * and its time is never a sample, so a failure cannot pass for a
+    * fast query. */
+  private[graft] def timePass(queries: Iterable[(String, () => Unit)],
+      best: scala.collection.mutable.Map[String, Double],
+      failed: scala.collection.mutable.Set[String]): Unit =
+    for ((name, action) <- queries) {
+      val t0 = System.nanoTime()
+      try {
+        action()
+        val t = (System.nanoTime() - t0) / 1e9
+        best(name) = math.min(best.getOrElse(name, Double.MaxValue), t)
+      } catch {
+        case scala.util.control.NonFatal(e) =>
+          System.err.println(s"bench: $name failed: $e")
+          failed += name
+      }
+    }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
@@ -89,11 +109,6 @@ object Bench {
     // puts each query's samples minutes apart, so the min sees at
     // least one quiet window per query.
     val runs = sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "3").toInt
-    def time(fn: (org.apache.spark.sql.SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
-      val t0 = System.nanoTime()
-      try { fn(spark, sfDir).count() } catch { case _: Throwable => -1L }
-      (System.nanoTime() - t0) / 1e9
-    }
     // optional comma-separated query-name filter for targeted timing;
     // unknown names are a hard error — a typo would otherwise emit an
     // empty bench whose total of 0.0 reads as an excellent result
@@ -104,6 +119,8 @@ object Bench {
       require(unknown.isEmpty, s"SPARK_GRAFT_BENCH_ONLY names not in SparkEntry.queries: ${unknown.mkString(",")}")
     }
     val picked = SparkEntry.queries.filter { case (n, _) => only.forall(_(n)) }
+    def actions(qs: Iterable[(String, (org.apache.spark.sql.SparkSession, String) => org.apache.spark.sql.DataFrame)]) =
+      qs.map { case (n, fn) => n -> (() => { fn(spark, sfDir).count(); () }) }
     // Cold protocol must hold for EVERY sample, not just pass 1: with
     // runs>1 the artifacts rebuilt during pass 1 would make min-of-N a
     // warm measurement stamped "cold" — exactly the silent drift the
@@ -115,12 +132,10 @@ object Bench {
       clearArtifacts(); graft.tools.Memos.clearAll()
     }
     val best = scala.collection.mutable.LinkedHashMap[String, Double]()
+    val failed = scala.collection.mutable.LinkedHashSet[String]()
     for (r <- 0 until math.max(1, runs)) {
       if (r > 0) recoolBetweenPasses()
-      for ((name, fn) <- picked) {
-        val t = time(fn)
-        best(name) = math.min(best.getOrElse(name, Double.MaxValue), t)
-      }
+      timePass(actions(picked), best, failed)
     }
     // Variance pinning (round-5 verdict #8): rows with a multi-second
     // floor get EXTRA interleaved passes — their per-sample noise
@@ -129,19 +144,17 @@ object Bench {
     // regressions exactly on these rows. ≤2 s rows stay at min-of-
     // `runs`; >2 s rows become min-of-(runs+extra).
     val extra = sys.env.getOrElse("SPARK_GRAFT_BENCH_EXTRA_RUNS", "2").toInt
-    val heavy = picked.filter { case (n, _) => best(n) > 2.0 }
+    val heavy = picked.filter { case (n, _) => best.get(n).exists(_ > 2.0) }
     for (_ <- 0 until math.max(0, extra)) {
       recoolBetweenPasses()
-      for ((name, fn) <- heavy) {
-        val t = time(fn)
-        best(name) = math.min(best(name), t)
-      }
+      timePass(actions(heavy), best, failed)
     }
     val results = best
     val qs = results.map { case (k, v) => s"\"" + k + "\":" + v }
       .mkString("{", ",", "}")
     val total = if (results.nonEmpty) results.values.sum else 0.0
     val heavyNames = heavy.keys.map(n => s"\"$n\"").mkString("[", ",", "]")
+    val failedNames = failed.map(n => s"\"$n\"").mkString("[", ",", "]")
     // Self-reporting drift vs the PREVIOUS round (round-11 verdict #8):
     // the host band moves whole benches by ±15% between rounds, so a
     // real single-query regression hides inside the uniform shift.
@@ -197,7 +210,7 @@ object Bench {
         f"""{"prev_total":${common.map(_._2).sum}%.1f,"common":${common.size},"median_ratio":${math.exp(m)}%.4f,"sigma_log":$sigma%.4f,"prev_merged_runs":$prevMergedRuns,"flagged":${flagged.mkString("{", ",", "}")}}"""
       }
     }
-    val json = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"sf":"$sfDir","runs":$runs,"agg":"min","extra_runs_gt2s":$extra,"protocol":"$protocol","heavy_rows":$heavyNames,"vs_prev":$vsPrev}"""
+    val json = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"sf":"$sfDir","runs":$runs,"agg":"min","extra_runs_gt2s":$extra,"protocol":"$protocol","heavy_rows":$heavyNames,"vs_prev":$vsPrev,"failed":$failedNames}"""
     // The full per-query JSON is ~4 KB at 100+ queries and every
     // BENCH_r1–r4 artifact shows "parsed": null with a truncated log
     // tail — so also (a) emit a SHORT single-line summary that survives
@@ -223,5 +236,7 @@ object Bench {
         (json + "\n").getBytes("UTF-8"))
       catch { case _: Throwable => () }
     spark.stop()
+    // a query that threw fails the run (its name is in "failed")
+    if (failed.nonEmpty) sys.exit(1)
   }
 }

@@ -28,20 +28,25 @@ object InvertedIndex {
       .select("doc_id", "word")
       .orderBy("doc_id", "word")
 
-  /** Unordered postings — shared sub-plan for q02..q06. Per-doc dedup
-    * (R7) happens before the groupBy shuffle, mirroring the reference's
-    * map-side dedup (`main.c++:130-141`); `collect_set` is the reduce
-    * merge (R11, `main.c++:190-203`); `sort_array` replaces the bubble
-    * sort (R14, `main.c++:240-252`). */
+  /** Unordered postings `(word, postings, df)` — shared sub-plan for
+    * q02..q06 and every index build. `collect_set` is the reduce merge
+    * (R11, `main.c++:190-203`) and the per-doc dedup (R7) at once;
+    * `sort_array` replaces the bubble sort (R14, `main.c++:240-252`).
+    * When the corpus's shared (doc_id, word) tf leaf already exists it
+    * is folded (no re-tokenize); otherwise the tokens aggregate in ONE
+    * pass and no leaf is built — a one-shot ingest (a base build, a
+    * delta, a MERGE source, a streaming epoch) runs the aggregation and
+    * its consumer, and pins nothing. `df = size(postings)` equals the
+    * leaf path's distinct-doc count. */
   def postingsUnordered(docs: DataFrame): DataFrame =
-    // round 14: the distinct (doc_id, word) relation is the shared tf
-    // leaf in eager mode (one tokenize per corpus for the whole index
-    // family); lazy keeps the tokenize→distinct tower
-    TextAnalysis.docWordsShared(docs)
-      .groupBy("word")
-      .agg(
+    TextAnalysis.docWordsLeafPeek(docs) match {
+      case Some(leaf) => leaf.groupBy("word").agg(
         sort_array(collect_set(col("doc_id"))).as("postings"),
         count(lit(1)).as("df"))
+      case None => TextFns.tokens(docs).groupBy("word")
+        .agg(sort_array(collect_set(col("doc_id"))).as("postings"))
+        .withColumn("df", size(col("postings")).cast("long"))
+    }
 
   /** [[postingsUnordered]] over a doc_id-sliced view of the corpus,
     * served from the FULL corpus's shared (doc_id, word) leaf: a

@@ -1,6 +1,6 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftColumnBridge, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.operators.InvertedIndex
@@ -224,6 +224,14 @@ object IndexStore {
   // half-merged. Merging is UNION of posting sets per word — the merge
   // of disjoint re-index epochs is exact, and re-merging a delta that
   // survived a crashed compaction is a no-op (idempotent recovery).
+  //
+  // Cost model: a word's base and delta rows share its letter bucket,
+  // so the merge is per letter and needs no exchange. A merged read is
+  // ONE scan ([[IndexMergedTable]]) whose tasks each take whole letters
+  // — at most one task per letter — and union, inside the reader, the
+  // postings of exactly the words a delta touches; every other base
+  // row streams through as read. A compaction is that scan plus the
+  // writer's own clustering exchange: two jobs.
 
   /** Append one delta epoch: a full mini-artifact via the V2 writer
     * (staged, all-or-nothing, ready-marked). */
@@ -246,40 +254,31 @@ object IndexStore {
       .map(_._2.toString)
   }
 
-  /** The up-to-date index: base ∪ deltas with per-word posting-set
-    * union. The 100 TB shape: deltas between compactions are SMALL, so
-    * their word set broadcasts and splits the base into an untouched
-    * part (passes through with NO shuffle or re-aggregation — the
-    * overwhelming majority) and a touched part that re-aggregates with
-    * the delta rows. Cost ≈ base scan + delta-sized aggregation, never
-    * a corpus-wide regroup. */
+  /** The up-to-date index: base ∪ the READY deltas with per-word
+    * posting-set union, as one `graft-index` merged scan (one job; no
+    * exchange, no aggregate). Each task loads one letter's delta rows
+    * at a time, streams that letter's base files and unions postings
+    * only for the words a delta touches; delta-only words come last.
+    * Memory: one letter's delta rows and the base postings of the words
+    * they touch — the "deltas are small" contract. Word filters push
+    * into the scan; (top-)N and `COUNT(*)` do not (a merged row is no
+    * one file's row). With no delta this is the plain base scan. */
   def readMerged(spark: SparkSession, dir: String): DataFrame = {
-    val base = readIndexTable(spark, dir)
     val deltas = listDeltas(spark, dir)
-    if (deltas.isEmpty) base
-    else {
-      val deltaRel = deltas.map(readIndexTable(spark, _))
-        .reduce(_ unionByName _)
-      val deltaWords = broadcast(deltaRel.select("word").distinct())
-      val untouched = base.join(deltaWords, Seq("word"), "left_anti")
-      val touched = base.join(deltaWords, Seq("word"), "left_semi")
-        .unionByName(deltaRel)
-        .groupBy("word")
-        .agg(sort_array(array_distinct(flatten(collect_list(col("postings")))))
-          .as("postings"))
-        .select(col("word"), size(col("postings")).cast("long").as("df"),
-          col("postings"))
-      untouched.unionByName(touched)
-    }
+    if (deltas.isEmpty) readIndexTable(spark, dir)
+    else GraftColumnBridge.read(spark, new IndexMergedTable(dir, deltas))
   }
 
-  /** Fold every delta into the base and drop them. Crash-safe at each
-    * step: the V2 writer stages and only truncates the old base at
+  /** Fold the READY deltas into the base and retire them: the merged
+    * scan of [[readMerged]] written back through the V2 writer — two
+    * jobs, the scan and the writer's clustering exchange. Crash-safe at
+    * each step: the writer stages and only truncates the old base at
     * commit (after the merged relation — which reads the old base — is
-    * fully computed); a failure between publish and delta deletion
-    * leaves deltas whose re-merge is a semantic no-op. The rewrite is
-    * sorted (writeIndexTable), so compaction also RESTORES top-N
-    * pushdown that unsorted deltas may have lacked.
+    * fully computed); the commit deletes exactly the epochs the scan
+    * read, after publishing — an epoch published meanwhile stays, and a
+    * failure before the deletion leaves epochs whose re-merge is a
+    * semantic no-op. The rewrite is sorted, so compaction also RESTORES
+    * top-N pushdown that unsorted deltas may have lacked.
     *
     * With `retainGeneration = true` the PRE-compaction base is first
     * snapshotted into `_gen_<n>/` — a complete, immutable mini-artifact
@@ -295,11 +294,8 @@ object IndexStore {
     val deltas = listDeltas(spark, dir)
     if (deltas.nonEmpty) {
       if (retainGeneration) snapshotGeneration(spark, dir)
-      writeIndexTable(readMerged(spark, dir), dir)
-      val fs = new org.apache.hadoop.fs.Path(dir)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      deltas.foreach(d =>
-        fs.delete(new org.apache.hadoop.fs.Path(d), true))
+      val merged = new IndexMergedTable(dir, deltas)
+      GraftColumnBridge.overwrite(GraftColumnBridge.read(spark, merged), merged)
     }
   }
 

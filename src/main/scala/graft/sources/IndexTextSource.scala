@@ -149,6 +149,15 @@ object IndexTextSource {
     case _ => true
   }
 
+  /** Where a grammar line `word:[id1 id2 …]` splits into word and ids:
+    * the index of its ":[" separator, or -1 when the line is not a
+    * grammar line. Tokens normalize to lowercase ASCII letters, so ":["
+    * cannot occur inside a word — the first occurrence is the separator. */
+  private[sources] def grammarCut(line: String): Int = {
+    val cut = line.indexOf(":[")
+    if (cut > 0 && line.endsWith("]")) cut else -1
+  }
+
   /** A filter [[wordMatches]] evaluates EXACTLY (no default-true
     * fallback) — the admission rule for DELETE, where matching must be
     * precise rather than merely conservative. `IsNotNull(word)` is
@@ -190,9 +199,8 @@ object IndexTextSource {
         try {
           var line = reader.readLine()
           while (line != null) {
-            val cut = line.indexOf(":[")
-            val isRow = line.nonEmpty && cut > 0 && line.endsWith("]")
-            if (isRow && filters.forall(wordMatches(_, line.substring(0, cut))))
+            val cut = grammarCut(line)
+            if (cut > 0 && filters.forall(wordMatches(_, line.substring(0, cut))))
               dropped += 1
             else kept += line
             line = reader.readLine()
@@ -255,27 +263,27 @@ object IndexTextSource {
     }
   }
 
-  /** Bin-pack files into multi-file splits with Spark's file-source
+  /** Bin-pack units of `len` bytes into splits with Spark's file-source
     * rule: `FilePartition.maxSplitBytes` (min of maxPartitionBytes and
-    * the bytes per leaf-parallelism slot, each file charged
+    * the bytes per leaf-parallelism slot, each unit charged
     * `openCostInBytes` extra) and `getFilePartitions`' next fit over
-    * the files largest first — the packing `FileSourceScanExec` gives
+    * the units largest first — the packing `FileSourceScanExec` gives
     * parquet, so a store of many small letter files runs a few tasks
-    * rather than one per file. Files are never split: the grammar is
-    * line-oriented and the (top-)N check is per file. */
-  private[sources] def packFiles(
-      files: Array[IndexFilePartition]): Array[IndexFilesPartition] = {
+    * rather than one per file. A unit is never split: a file because
+    * the grammar is line-oriented and the (top-)N check is per file, a
+    * letter because the merged scan unions a word's rows within it. */
+  private[sources] def pack[T](units: Seq[T])(len: T => Long): Seq[Seq[T]] = {
     import org.apache.spark.paths.SparkPath
     import org.apache.spark.sql.execution.datasources.{FilePartition, PartitionedFile}
     val spark = org.apache.spark.sql.SparkSession.active
     val openCost = spark.sessionState.conf.filesOpenCostInBytes
-    val maxSplit = FilePartition.maxSplitBytes(spark, files.map(_.len + openCost).sum)
-    val byPath = files.map(f => SparkPath.fromPathString(f.file) -> f).toMap
-    val sparkFiles = files.sortBy(-_.len).toSeq.map(f =>
-      PartitionedFile(InternalRow.empty, SparkPath.fromPathString(f.file), 0L, f.len))
-    FilePartition.getFilePartitions(spark, sparkFiles, maxSplit)
-      .map(p => IndexFilesPartition(p.files.toSeq.map(pf => byPath(pf.filePath))))
-      .toArray
+    val maxSplit = FilePartition.maxSplitBytes(spark, units.map(len(_) + openCost).sum)
+    // each unit rides Spark's rule as a pseudo-file named by its index
+    val asFiles = units.indices.sortBy(i => -len(units(i))).map(i =>
+      PartitionedFile(InternalRow.empty, SparkPath.fromPathString(s"/$i"), 0L,
+        len(units(i))))
+    FilePartition.getFilePartitions(spark, asFiles, maxSplit)
+      .map(_.files.toSeq.map(f => units(f.filePath.toPath.getName.toInt)))
   }
 
   /** Does a pushed V2 top-N ordering match the artifact's OWN on-disk
@@ -655,14 +663,15 @@ private[graft] class IndexTextScan(path: String, val pushed: Array[Filter],
   }
 
   /** Planned files bin-packed into byte-sized splits
-    * ([[IndexTextSource.packFiles]]), except where a split must be one
+    * ([[IndexTextSource.pack]]), except where a split must be one
     * file: a scan serving `_letter` reports key-grouped partitioning,
     * which needs each split's `HasPartitionKey`, and the pushed
     * `COUNT(*)` reader emits one partial row per file. */
   override def planInputPartitions(): Array[InputPartition] =
     if (countStar || readSchema().fieldNames.contains(IndexTextSource.LetterCol))
       plannedFiles.map(p => p: InputPartition)
-    else IndexTextSource.packFiles(plannedFiles).map(p => p: InputPartition)
+    else IndexTextSource.pack(plannedFiles.toSeq)(_.len)
+      .map(fs => IndexFilesPartition(fs): InputPartition).toArray
 
   @volatile private var plannedCount = 0L
   @volatile private var prunedCount = 0L
@@ -781,7 +790,7 @@ private[graft] case class IndexFilePartition(file: String, len: Long)
 }
 
 /** A bin-packed split of several artifact files, read one after the
-  * other ([[IndexTextSource.packFiles]]). */
+  * other ([[IndexTextSource.pack]]). */
 private[graft] case class IndexFilesPartition(files: Seq[IndexFilePartition])
     extends InputPartition
 
@@ -811,9 +820,7 @@ private[graft] class IndexCountReaderFactory(
           try {
             var line = reader.readLine()
             while (line != null) {
-              // same validity rule as the row reader: a grammar line
-              if (line.nonEmpty && line.indexOf(":[") > 0 && line.endsWith("]"))
-                count += 1
+              if (IndexTextSource.grammarCut(line) > 0) count += 1
               linesRead += 1
               line = reader.readLine()
             }
@@ -918,20 +925,16 @@ private[graft] class IndexTextPartitionReader(file: String,
     if (limit.exists(emitted >= _)) return false
     var line = reader.readLine()
     while (line != null) {
-      if (line.nonEmpty) {
-        val cut = line.indexOf(":[")
-        // tokens normalize to lowercase ASCII letters, so ":[" cannot
-        // occur inside a word — the first occurrence is the separator
-        if (cut > 0 && line.endsWith("]")) {
-          linesRead += 1
-          val word = line.substring(0, cut)
-          if (orderedLimit) verifyOrder(word, line, cut)
-          if (pushed.forall(IndexTextSource.wordMatches(_, word))) {
-            row = buildRow(word, line.substring(cut + 2, line.length - 1))
-            emitted += 1
-            return true
-          } else rowsSkipped += 1
-        }
+      val cut = IndexTextSource.grammarCut(line)
+      if (cut > 0) {
+        linesRead += 1
+        val word = line.substring(0, cut)
+        if (orderedLimit) verifyOrder(word, line, cut)
+        if (pushed.forall(IndexTextSource.wordMatches(_, word))) {
+          row = buildRow(word, line.substring(cut + 2, line.length - 1))
+          emitted += 1
+          return true
+        } else rowsSkipped += 1
       }
       line = reader.readLine()
     }

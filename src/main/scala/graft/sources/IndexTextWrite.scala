@@ -33,7 +33,8 @@ import org.apache.spark.sql.types.StructType
   * produces grammar-ordered, `_GRAFT_SORTED`-marked files with one
   * engine-planned shuffle. */
 private[graft] class IndexTextWriteBuilder(path: String, queryId: String,
-    schema: StructType) extends WriteBuilder with SupportsTruncate {
+    schema: StructType, retiredDeltas: Option[Seq[String]] = None)
+    extends WriteBuilder with SupportsTruncate {
   private var truncateFirst = false
   /** `mode("overwrite")` plans OverwriteByExpression(true) → truncate:
     * job commit clears the previous artifact before publishing. */
@@ -53,7 +54,7 @@ private[graft] class IndexTextWriteBuilder(path: String, queryId: String,
     import org.apache.spark.sql.connector.distributions.{Distribution, Distributions}
     import org.apache.spark.sql.connector.expressions.{Expressions, SortDirection, SortOrder}
     override def toBatch: BatchWrite =
-      new IndexTextBatchWrite(path, queryId, schema, truncateFirst)
+      new IndexTextBatchWrite(path, queryId, schema, truncateFirst, retiredDeltas)
     /** Write-side observability, symmetric with the scan's: per-task
       * grammar lines and letter files written (SQL-metrics surface). */
     override def supportedCustomMetrics()
@@ -72,8 +73,12 @@ private[graft] class IndexTextWriteBuilder(path: String, queryId: String,
   }
 }
 
+/** `retiredDeltas`: None for an ordinary write; for a compaction (an
+  * overwrite of [[IndexMergedTable]]) the delta epochs its merged scan
+  * read, which the commit deletes once the new base is published. */
 private[graft] class IndexTextBatchWrite(path: String, queryId: String,
-    schema: StructType, truncateFirst: Boolean) extends BatchWrite {
+    schema: StructType, truncateFirst: Boolean,
+    retiredDeltas: Option[Seq[String]] = None) extends BatchWrite {
 
   private val staging = s"$path/_graft_staging_$queryId"
 
@@ -127,17 +132,18 @@ private[graft] class IndexTextBatchWrite(path: String, queryId: String,
     if (truncateFirst) {
       // overwrite semantics: drop the previous artifact ONLY now, when
       // every task has succeeded — a failed job leaves the old index
-      // intact (all-or-nothing at the artifact level). Delta epochs go
-      // too: they were unioned views over the OLD base — serving them
-      // over a replaced corpus would resurrect deleted documents.
-      // (compact() is safe: its merged relation is fully computed from
-      // base+deltas before this commit runs.)
+      // intact (all-or-nothing at the artifact level). A user overwrite
+      // drops every delta epoch too: they were unioned views over the
+      // OLD base — serving them over a replaced corpus would resurrect
+      // deleted documents. A compaction keeps them here and retires
+      // only the epochs it merged, after the publish (below).
       fs.delete(new Path(base, "_GRAFT_READY"), false)
       fs.delete(new Path(base, IndexTextSource.SortedMarker), false)
       Option(fs.globStatus(new Path(base, "letter=*")))
         .foreach(_.foreach(d => fs.delete(d.getPath, true)))
-      Option(fs.globStatus(new Path(base, "_delta_*")))
-        .foreach(_.foreach(d => if (d.isDirectory) fs.delete(d.getPath, true)))
+      if (retiredDeltas.isEmpty)
+        Option(fs.globStatus(new Path(base, "_delta_*")))
+          .foreach(_.foreach(d => if (d.isDirectory) fs.delete(d.getPath, true)))
     }
     messages.foreach {
       case m: IndexFilesCommitted =>
@@ -164,6 +170,12 @@ private[graft] class IndexTextBatchWrite(path: String, queryId: String,
     else
       fs.delete(new Path(base, IndexTextSource.SortedMarker), false)
     fs.create(new Path(base, "_GRAFT_READY"), true).close()
+    // a compaction's merged epochs now live in the base. An epoch
+    // published after its scan was planned commits under its own
+    // directory's lease, not this one, so it is kept, not dropped
+    // unmerged. A crash before this loop leaves merged epochs whose
+    // re-merge is a no-op (posting-set union is idempotent).
+    retiredDeltas.foreach(_.foreach(d => fs.delete(new Path(d), true)))
   }
 
   override def abort(messages: Array[WriterCommitMessage]): Unit = {

@@ -131,7 +131,10 @@ object EventStreams {
     * is the right sink tier here: each epoch is itself a complete
     * batch artifact, so exactly-once comes from the committer's
     * all-or-nothing publish plus epoch-numbered idempotence (a
-    * replayed epoch overwrites its own delta dir, not the base). */
+    * replayed epoch overwrites its own delta dir, not the base). Each
+    * epoch's postings aggregate in one pass and pin no tower
+    * (`InvertedIndex.postingsUnordered`), so a long-running sink holds
+    * nothing per micro-batch. */
   def indexDeltaSink(docs: DataFrame, dir: String)
       : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
     docs.writeStream.outputMode("append").foreachBatch {

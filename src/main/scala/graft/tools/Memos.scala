@@ -54,7 +54,7 @@ object Memos {
     else towers.get(key(name, docs, params)).map(_.asInstanceOf[V])
 
   /** The name of every registered tower, one per entry. */
-  def names: Seq[String] = towers.keys.map(_._1).toSeq
+  def names: Seq[String] = towers.keys.toSeq.map(_._1)
 
   /** Drop every tower, plus LabelStore's count-gate stamps (not a
     * tower: it caches table create-times, but a warm gate would still

@@ -91,6 +91,20 @@ class BenchArtifactSpec extends SparkSpec {
     assert(Bench.parsePrevQueries("{\"metric\":1}").isEmpty)
   }
 
+  test("a throwing query is recorded as failed, never as a sample") {
+    val best = scala.collection.mutable.LinkedHashMap[String, Double]()
+    val failed = scala.collection.mutable.LinkedHashSet[String]()
+    def boom(): Unit = throw new IllegalStateException("boom")
+    Bench.timePass(Seq("q_ok" -> (() => ()), "q_boom" -> (() => boom())),
+      best, failed)
+    assert(best.keySet === Set("q_ok"))
+    assert(failed.toList === List("q_boom"))
+    // a later good sample is kept, and the failure stays on record
+    Bench.timePass(Seq("q_boom" -> (() => ())), best, failed)
+    assert(best.keySet === Set("q_ok", "q_boom"))
+    assert(failed.toList === List("q_boom"))
+  }
+
   test("unrelated tmp entries never match") {
     val d = "/root/testdata/sf0.1"
     assert(!matches(d, "graft_wh12345"))                 // spec warehouses

@@ -71,6 +71,59 @@ class JobBudgetSpec extends SparkSpec {
     assert(jobs <= 4, s"lshAnnStored ran $jobs jobs")
   }
 
+  /** A base of the even documents plus two delta epochs. */
+  private def twoDeltaStore(): String = {
+    val dir = java.nio.file.Files.createTempDirectory("graft_budget_idx").toString
+    IndexStore.writeIndexTable(
+      InvertedIndex.postingsUnordered(docs.where(col("doc_id") % 2 === 0)), dir)
+    IndexStore.writeIndexDelta(
+      InvertedIndex.postingsUnordered(docs.where(col("doc_id") % 4 === 1)), dir, 1L)
+    IndexStore.writeIndexDelta(
+      InvertedIndex.postingsUnordered(docs.where(col("doc_id") % 4 === 3)), dir, 2L)
+    dir
+  }
+
+  test("readMerged over a base and two deltas runs 1 job") {
+    val dir = twoDeltaStore()
+    val (jobs, _) = budget(IndexStore.readMerged(spark, dir).collect())
+    info(s"$jobs jobs")
+    assert(jobs === 1, s"merged read ran $jobs jobs")
+  }
+
+  test("compact runs at most 2 jobs and plans no broadcast") {
+    val dir = twoDeltaStore()
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val seen = new CountDownLatch(1)
+    val l = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
+          ns: Long): Unit = { plans.add(qe.executedPlan.toString); seen.countDown() }
+      override def onFailure(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
+          e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(l)
+    val (jobs, _) =
+      try budget(IndexStore.compact(spark, dir, retainGeneration = true))
+      finally {
+        assert(seen.await(30, TimeUnit.SECONDS), "compaction plan never observed")
+        spark.listenerManager.unregister(l)
+      }
+    info(s"$jobs jobs")
+    assert(jobs <= 2, s"compact ran $jobs jobs")
+    plans.forEach(p => assert(!p.contains("BroadcastExchange"), p))
+    assert(IndexStore.listDeltas(spark, dir).isEmpty)
+  }
+
+  test("a one-shot index build runs at most 2 jobs and registers no tower") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_budget_build").toString
+    val fresh = docs.where(col("doc_id") % 3 === 0) // no tf leaf exists for it
+    val towers = graft.tools.Memos.names
+    val (jobs, _) = budget(
+      IndexStore.writeIndexTable(InvertedIndex.postingsUnordered(fresh), dir))
+    info(s"$jobs jobs")
+    assert(jobs <= 2, s"one-shot build ran $jobs jobs")
+    assert(graft.tools.Memos.names.sorted === towers.sorted)
+  }
+
   test("an unfiltered graft-index top-N runs at most defaultParallelism tasks") {
     val idx = IndexStore.readIndexTable(spark, IndexStore.textIndexFor(spark, testdataDir))
     val (_, tasks) = budget(idx.select("word", "df")
