@@ -35,6 +35,14 @@ object Bench {
     }
   }
 
+  /** The full result line. Fields only ever append, so every earlier
+    * field keeps its place; `cpus` (last) is the `local[N]` width of
+    * the run — two points compare only at equal `cpus`. */
+  private[graft] def resultJson(total: Double, queries: String,
+      sfDir: String, runs: Int, extra: Int, protocol: String,
+      heavy: String, vsPrev: String, failed: String, cpus: Int): String =
+    s"""{"metric":"total","value":$total,"unit":"sec","queries":$queries,"sf":"$sfDir","runs":$runs,"agg":"min","extra_runs_gt2s":$extra,"protocol":"$protocol","heavy_rows":$heavy,"vs_prev":$vsPrev,"failed":$failed,"cpus":$cpus}"""
+
   /** One interleaved pass: run each query's action once, keeping the
     * per-query minimum in `best`. A query that throws joins `failed`
     * and its time is never a sample, so a failure cannot pass for a
@@ -210,7 +218,8 @@ object Bench {
         f"""{"prev_total":${common.map(_._2).sum}%.1f,"common":${common.size},"median_ratio":${math.exp(m)}%.4f,"sigma_log":$sigma%.4f,"prev_merged_runs":$prevMergedRuns,"flagged":${flagged.mkString("{", ",", "}")}}"""
       }
     }
-    val json = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"sf":"$sfDir","runs":$runs,"agg":"min","extra_runs_gt2s":$extra,"protocol":"$protocol","heavy_rows":$heavyNames,"vs_prev":$vsPrev,"failed":$failedNames}"""
+    val json = resultJson(total, qs, sfDir, runs, extra, protocol,
+      heavyNames, vsPrev, failedNames, cpus.toInt)
     // The full per-query JSON is ~4 KB at 100+ queries and every
     // BENCH_r1–r4 artifact shows "parsed": null with a truncated log
     // tail — so also (a) emit a SHORT single-line summary that survives

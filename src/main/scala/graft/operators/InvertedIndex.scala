@@ -194,7 +194,8 @@ object InvertedIndex {
     // Touch the missing ones — 26 driver-side FS ops, scale-free.
     import org.apache.hadoop.fs.Path
     val base = new Path(outDir)
-    val fs = base.getFileSystem(docs.sparkSession.sparkContext.hadoopConfiguration)
+    val fs = graft.sources.StoreFs.of(base,
+      docs.sparkSession.sparkContext.hadoopConfiguration)
     ('a' to 'z').foreach { l =>
       val dir = new Path(base, s"letter=$l")
       if (!fs.exists(dir)) {

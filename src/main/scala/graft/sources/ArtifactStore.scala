@@ -95,7 +95,7 @@ object ArtifactStore {
 
   private def exists(df: DataFrame, dir: String): Boolean = {
     val p = new Path(dir, "_SUCCESS")
-    p.getFileSystem(df.sparkSession.sessionState.newHadoopConf()).exists(p)
+    StoreFs.of(p, df.sparkSession.sessionState.newHadoopConf()).exists(p)
   }
 
   private def writeRead(df: DataFrame, dir: String): DataFrame = {
@@ -125,7 +125,7 @@ object ArtifactStore {
   private def crossLocked[A](keyDf: DataFrame, dir: String)(body: => A): A = {
     val spark = keyDf.sparkSession
     val lock = new Path(dir + ".lock")
-    val fs = lock.getFileSystem(spark.sessionState.newHadoopConf())
+    val fs = StoreFs.of(lock, spark.sessionState.newHadoopConf())
     StoreLock.withLease(StoreLock.backendFor(spark, fs), lock,
       StoreLock.leaseMs(spark), StoreLock.waitMs(spark), wait = true)(body)
   }

@@ -86,7 +86,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces {
 
   override def name(): String = catalogName
 
-  private def fs = warehouse.getFileSystem(
+  private def fs = StoreFs.of(warehouse,
     org.apache.spark.sql.SparkSession.active.sparkContext.hadoopConfiguration)
 
   private def dirFor(ident: Identifier): Path =

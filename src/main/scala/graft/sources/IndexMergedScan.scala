@@ -189,7 +189,7 @@ private[graft] class IndexMergedPartitionReader(letters: Seq[IndexLetterFiles],
   private def lines(f: IndexFilePartition): Iterator[(String, String)] = {
     val p = new Path(f.file)
     val reader = new java.io.BufferedReader(new java.io.InputStreamReader(
-      p.getFileSystem(hadoopConf.value).open(p),
+      StoreFs.of(p, hadoopConf.value).open(p),
       java.nio.charset.StandardCharsets.UTF_8))
     open = reader
     Iterator.continually(reader.readLine())

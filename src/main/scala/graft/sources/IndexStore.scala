@@ -160,18 +160,16 @@ object IndexStore {
       .write.format("graft-index").mode("overwrite").save(dir)
 
   /** Materialize-once cache of the R16 text index for a corpus dir —
-    * q160's build step. Keyed like the Sidecar copies: sanitized path +
-    * a (path, length, mtime) fingerprint of the source parquet, so a
-    * regenerated same-path corpus can never serve a stale index. The
+    * q160's build step. Keyed by [[Sidecar.storeArtifactDir]]:
+    * sanitized path + a (path, length, mtime) fingerprint of the source
+    * parquet folded with graft's code stamp, so neither a regenerated
+    * same-path corpus nor a changed build can serve a stale index. The
     * `_GRAFT_READY` marker is written only after `writeIndex`'s
     * post-write empty-letter touch-up, so a concurrent reader never
     * observes a half-published artifact. */
   def textIndexFor(spark: SparkSession, sfDir: String): String =
     synchronized {
-      val docsPath = s"$sfDir/documents.parquet"
-      val out = s"${sys.props("java.io.tmpdir")}/graft_textindex_" +
-        s"${sfDir.replaceAll("[^A-Za-z0-9]+", "_")}_" +
-        java.lang.Integer.toHexString(fingerprint(docsPath))
+      val out = artifactDir("textindex", sfDir)
       val ready = java.nio.file.Paths.get(out, "_GRAFT_READY")
       if (!java.nio.file.Files.exists(ready)) {
         InvertedIndex.writeIndex(Tables(spark, sfDir, "documents"), out)
@@ -189,9 +187,7 @@ object IndexStore {
     * publishes `_GRAFT_READY` last. */
   def dsv2IndexFor(spark: SparkSession, sfDir: String): String =
     synchronized {
-      val out = s"${sys.props("java.io.tmpdir")}/graft_dsv2idx_" +
-        s"${sfDir.replaceAll("[^A-Za-z0-9]+", "_")}_" +
-        java.lang.Integer.toHexString(fingerprint(s"$sfDir/documents.parquet"))
+      val out = artifactDir("dsv2idx", sfDir)
       if (!java.nio.file.Files.exists(java.nio.file.Paths.get(out, "_GRAFT_READY")))
         writeIndexTable(
           InvertedIndex.postingsUnordered(Tables(spark, sfDir, "documents")), out)
@@ -242,7 +238,7 @@ object IndexStore {
     * commit never published is invisible, like its base counterpart). */
   def listDeltas(spark: SparkSession, dir: String): Seq[String] = {
     val base = new org.apache.hadoop.fs.Path(dir)
-    val fs = base.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = StoreFs.of(base, spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(base)) Nil
     else fs.listStatus(base).toSeq
       .filter(s => s.isDirectory && s.getPath.getName.startsWith("_delta_"))
@@ -302,7 +298,7 @@ object IndexStore {
   /** Published (ready) generation numbers of an artifact, ascending. */
   def listGenerations(spark: SparkSession, dir: String): Seq[Long] = {
     val base = new org.apache.hadoop.fs.Path(dir)
-    val fs = base.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = StoreFs.of(base, spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(base)) Nil
     else fs.listStatus(base).toSeq
       .filter(s => s.isDirectory && s.getPath.getName.startsWith("_gen_"))
@@ -317,11 +313,15 @@ object IndexStore {
     * half-copied generation is never visible. A physical copy keeps
     * every generation self-contained (a generation never dangles on
     * files a later compaction rewrites); a deployment with a manifest
-    * layer would record file references instead — same contract. */
+    * layer would record file references instead — same contract.
+    * Cost: the copy creates one directory per letter and one file plus
+    * `.crc` per letter file, through [[StoreFs]], which sets their
+    * modes in-process — so it scales with the base's bytes, not with a
+    * forked `chmod` per created path. */
   private def snapshotGeneration(spark: SparkSession, dir: String): Long = {
     val conf = spark.sparkContext.hadoopConfiguration
     val base = new org.apache.hadoop.fs.Path(dir)
-    val fs = base.getFileSystem(conf)
+    val fs = StoreFs.of(base, conf)
     // number past every _gen_ dir, ready or not — a crashed partial
     // snapshot must not be overwritten into
     val next = fs.listStatus(base)
@@ -398,9 +398,7 @@ object IndexStore {
     * rebuilds the survivor set from the raw corpus, so a green row
     * gates the whole metadata-delete path end-to-end. */
   def deleteDemoFor(spark: SparkSession, sfDir: String): String = synchronized {
-    val out = s"${sys.props("java.io.tmpdir")}/graft_delidx_" +
-      s"${sfDir.replaceAll("[^A-Za-z0-9]+", "_")}_" +
-      java.lang.Integer.toHexString(fingerprint(s"$sfDir/documents.parquet"))
+    val out = artifactDir("delidx", sfDir)
     val done = java.nio.file.Paths.get(out, "_DEMO_READY")
     if (!java.nio.file.Files.exists(done)) {
       writeIndexTable(
@@ -419,9 +417,7 @@ object IndexStore {
     * row-level-operation rewrite — the DML answer to the LSM delta
     * path (q171): same end state, one declarative statement. */
   def mergeDemoFor(spark: SparkSession, sfDir: String): String = synchronized {
-    val out = s"${sys.props("java.io.tmpdir")}/graft_mergeidx_" +
-      s"${sfDir.replaceAll("[^A-Za-z0-9]+", "_")}_" +
-      java.lang.Integer.toHexString(fingerprint(s"$sfDir/documents.parquet"))
+    val out = artifactDir("mergeidx", sfDir)
     val done = java.nio.file.Paths.get(out, "_DEMO_READY")
     if (!java.nio.file.Files.exists(done)) {
       val docs = Tables(spark, sfDir, "documents")
@@ -450,16 +446,16 @@ object IndexStore {
     * base = even doc_ids, one delta epoch = odd doc_ids — so the
     * merged (resp. compacted) index must equal a full-corpus build. */
   def deltaDemoFor(spark: SparkSession, sfDir: String): String =
-    demoArtifact(spark, sfDir, "graft_deltaidx_", compactAfter = false)
+    demoArtifact(spark, sfDir, "deltaidx", compactAfter = false)
 
   def compactDemoFor(spark: SparkSession, sfDir: String): String =
-    demoArtifact(spark, sfDir, "graft_compactidx_", compactAfter = true)
+    demoArtifact(spark, sfDir, "compactidx", compactAfter = true)
 
   /** q183's artifact: compacted WITH generation retention, so
     * `VERSION AS OF 0` must serve the pre-compaction base (the
     * even-doc_id index) while the live table serves the full merge. */
   def timeTravelDemoFor(spark: SparkSession, sfDir: String): String =
-    demoArtifact(spark, sfDir, "graft_ttidx_", compactAfter = true,
+    demoArtifact(spark, sfDir, "ttidx", compactAfter = true,
       retain = true)
 
   /** q261's artifact: a FOUR-quarter ingest history whose INTERIOR
@@ -492,9 +488,7 @@ object IndexStore {
     * only `grown` — every class here is MANUFACTURED by DML, not
     * hoped for from the data. */
   def versionDiffDemoFor(spark: SparkSession, sfDir: String): String = synchronized {
-    val out = s"${sys.props("java.io.tmpdir")}/graft_vdidx_" +
-      s"${sfDir.replaceAll("[^A-Za-z0-9]+", "_")}_" +
-      java.lang.Integer.toHexString(fingerprint(s"$sfDir/documents.parquet"))
+    val out = artifactDir("vdidx", sfDir)
     val done = java.nio.file.Paths.get(out, "_DEMO_READY")
     if (!java.nio.file.Files.exists(done)) {
       val docs = Tables(spark, sfDir, "documents")
@@ -568,11 +562,9 @@ object IndexStore {
       .orderBy("word")
 
   private def demoArtifact(spark: SparkSession, sfDir: String,
-      prefix: String, compactAfter: Boolean,
+      kind: String, compactAfter: Boolean,
       retain: Boolean = false): String = synchronized {
-    val out = s"${sys.props("java.io.tmpdir")}/$prefix" +
-      s"${sfDir.replaceAll("[^A-Za-z0-9]+", "_")}_" +
-      java.lang.Integer.toHexString(fingerprint(s"$sfDir/documents.parquet"))
+    val out = artifactDir(kind, sfDir)
     val done = java.nio.file.Paths.get(out, "_DEMO_READY")
     if (!java.nio.file.Files.exists(done)) {
       val docs = Tables(spark, sfDir, "documents")
@@ -587,8 +579,8 @@ object IndexStore {
     out
   }
 
-  /** One fingerprint definition repo-wide: [[Sidecar.sourceFingerprint]]
-    * (path, length, mtime walk) — shared so cache keying can never
-    * diverge between the sidecar copies and the index artifacts. */
-  private def fingerprint(src: String): Int = Sidecar.sourceFingerprint(src)
+  /** Every artifact here is built from the corpus's documents; the
+    * key is [[Sidecar.storeArtifactDir]]'s (corpus state, code stamp). */
+  private def artifactDir(kind: String, sfDir: String): String =
+    Sidecar.storeArtifactDir(kind, sfDir, s"$sfDir/documents.parquet")
 }

@@ -92,7 +92,7 @@ object IndexTextSource {
   private[sources] def artifactSorted(path: String): Boolean =
     try {
       val p = new Path(path, SortedMarker)
-      p.getFileSystem(org.apache.spark.sql.SparkSession.active
+      StoreFs.of(p, org.apache.spark.sql.SparkSession.active
         .sparkContext.hadoopConfiguration).exists(p)
     } catch { case scala.util.control.NonFatal(_) => false }
 
@@ -191,7 +191,7 @@ object IndexTextSource {
       .parallelize(files.map(_.file).toIndexedSeq, files.length)
       .foreach { f =>
         val path = new Path(f)
-        val fs = path.getFileSystem(conf.value)
+        val fs = StoreFs.of(path, conf.value)
         val reader = new java.io.BufferedReader(new java.io.InputStreamReader(
           fs.open(path), java.nio.charset.StandardCharsets.UTF_8))
         val kept = new scala.collection.mutable.ArrayBuffer[String]()
@@ -243,7 +243,7 @@ object IndexTextSource {
     val base = new Path(root)
     val conf = org.apache.spark.sql.SparkSession.active
       .sparkContext.hadoopConfiguration
-    val fs = base.getFileSystem(conf)
+    val fs = StoreFs.of(base, conf)
     if (!fs.exists(base)) (Array.empty, 0)
     else {
       val byLetter = fs.listStatus(base).iterator
@@ -717,7 +717,7 @@ private[graft] class IndexDeltaMicroBatchStream(path: String,
 
   private def readyEpochs: Seq[Long] = {
     val base = new Path(path)
-    val fs = base.getFileSystem(org.apache.spark.sql.SparkSession.active
+    val fs = StoreFs.of(base, org.apache.spark.sql.SparkSession.active
       .sparkContext.hadoopConfiguration)
     if (!fs.exists(base)) Nil
     else fs.listStatus(base).toSeq
@@ -812,7 +812,7 @@ private[graft] class IndexCountReaderFactory(
         if (done) false
         else {
           val p = new Path(file)
-          val fs = p.getFileSystem(hadoopConf.map(_.value)
+          val fs = StoreFs.of(p, hadoopConf.map(_.value)
             .getOrElse(new org.apache.hadoop.conf.Configuration()))
           val reader = new java.io.BufferedReader(
             new java.io.InputStreamReader(fs.open(p),
@@ -911,7 +911,7 @@ private[graft] class IndexTextPartitionReader(file: String,
 
   private val fs = {
     val p = new Path(file)
-    p.getFileSystem(hadoopConf.map(_.value)
+    StoreFs.of(p, hadoopConf.map(_.value)
       .getOrElse(new org.apache.hadoop.conf.Configuration()))
   }
   private val reader = new java.io.BufferedReader(

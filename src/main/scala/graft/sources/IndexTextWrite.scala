@@ -97,7 +97,11 @@ private[graft] class IndexTextBatchWrite(path: String, queryId: String,
     * into the destination letter directory. Single driver-side pass —
     * renames, not copies (same filesystem); partial-failure window is
     * the rename loop, which is the same exposure every Hadoop-style
-    * committer v1 accepts.
+    * committer v1 accepts. Its filesystem, like the writer tasks', is
+    * [[StoreFs]]'s: on local paths the 26 letter `mkdirs`, the marker
+    * files and the tasks' part-files and `.crc` siblings get their
+    * modes set in-process, so a write costs its renames and bytes,
+    * not one forked `chmod` per created path.
     *
     * The WHOLE publish runs under the table's exclusive commit lease
     * (`_GRAFT_LOCK`, [[StoreLock]]): two simultaneous writers would
@@ -107,7 +111,7 @@ private[graft] class IndexTextBatchWrite(path: String, queryId: String,
     * loser's staging tree — its artifact never becomes visible. */
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
     val base = new Path(path)
-    val fs = base.getFileSystem(hadoopConf.value)
+    val fs = StoreFs.of(base, hadoopConf.value)
     val leaseMs = hadoopConf.value
       .getLong("graft.commit.lease.ms", StoreLock.DefaultLeaseMs)
     StoreLock.withLease(fs, new Path(base, "_GRAFT_LOCK"), leaseMs,
@@ -179,7 +183,7 @@ private[graft] class IndexTextBatchWrite(path: String, queryId: String,
   }
 
   override def abort(messages: Array[WriterCommitMessage]): Unit = {
-    val fs = new Path(path).getFileSystem(hadoopConf.value)
+    val fs = StoreFs.of(new Path(path), hadoopConf.value)
     fs.delete(new Path(staging), true)
   }
 }
@@ -210,7 +214,7 @@ private[graft] class IndexTextDataWriter(staging: String, taskUid: String,
   private val wordAt = schema.fieldIndex("word")
   private val postingsAt = schema.fieldIndex("postings")
 
-  private val fs = new Path(staging).getFileSystem(
+  private val fs = StoreFs.of(new Path(staging),
     hadoopConf.map(_.value)
       .getOrElse(new org.apache.hadoop.conf.Configuration()))
   private val streams =

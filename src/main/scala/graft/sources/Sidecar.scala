@@ -60,6 +60,17 @@ object Sidecar {
       .hashCode()
   }
 
+  /** `<tmpdir>/graft_<kind>_<sanitized sfDir>_<hex>`: where a
+    * materialize-once store artifact built from `src` persists across
+    * JVMs. The hex folds the source's file-state fingerprint with
+    * [[CodeStamp]], so neither a regenerated corpus nor a changed graft
+    * build is ever served an artifact an older one wrote. */
+  private[graft] def storeArtifactDir(kind: String, sfDir: String,
+      src: String): String =
+    s"${sys.props("java.io.tmpdir")}/graft_${kind}_" +
+      s"${sfDir.replaceAll("[^A-Za-z0-9]+", "_")}_" +
+      java.lang.Integer.toHexString((sourceFingerprint(src), CodeStamp.stamp).hashCode)
+
   private def timestamped[T](rw: Either[DataFrameReader, DataFrameWriter[Row]]) =
     rw match {
       case Left(r) => Left(r.option("timestampFormat", TsFmt)
@@ -314,4 +325,16 @@ object Sidecar {
     spark.read.option("mergeSchema", "true")
       .parquet(s"$out/gen0", s"$out/gen1")
   }
+}
+
+/** graft's own code source — its jar, or its class directory under a
+  * build tool — fingerprinted once per JVM by
+  * [[Sidecar.sourceFingerprint]]. A `var` only so a spec can stand in
+  * for a rebuilt jar. */
+private[graft] object CodeStamp {
+  @volatile var stamp: Int =
+    Option(getClass.getProtectionDomain.getCodeSource)
+      .map(cs => Sidecar.sourceFingerprint(
+        new java.io.File(cs.getLocation.toURI).getPath))
+      .getOrElse(0)
 }

@@ -393,7 +393,7 @@ object StoreLock {
     val lock = new Path(
       new Path(spark.sessionState.conf.warehousePath),
       s"_graft_locks/$name.lock")
-    val fs = lock.getFileSystem(spark.sessionState.newHadoopConf())
+    val fs = StoreFs.of(lock, spark.sessionState.newHadoopConf())
     withLeaseHandle(backendFor(spark, fs), lock, leaseMs(spark),
       waitMs(spark), wait = false)(body)
   }

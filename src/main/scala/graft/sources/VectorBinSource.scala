@@ -91,7 +91,7 @@ object VectorBinSource {
   /** (bucket, file, length) for every data file under the artifact. */
   private[sources] def listFiles(path: String): Seq[(Long, String, Long)] = {
     val root = new Path(path)
-    val fs = root.getFileSystem(org.apache.spark.sql.SparkSession.active
+    val fs = StoreFs.of(root, org.apache.spark.sql.SparkSession.active
       .sparkContext.hadoopConfiguration)
     if (!fs.exists(root)) Seq.empty
     else fs.listStatus(root).toSeq
@@ -233,7 +233,7 @@ private[graft] class VectorBinPartitionReader(p: VectorFilePartition,
   private val in: java.io.DataInputStream = {
     val hp = new Path(p.file)
     new java.io.DataInputStream(new java.io.BufferedInputStream(
-      hp.getFileSystem(conf.value).open(hp), 1 << 16))
+      StoreFs.of(hp, conf.value).open(hp), 1 << 16))
   }
   private var consumed = 0L
   private var current: InternalRow = _

@@ -40,8 +40,7 @@ object VectorStore {
       embeddings.sparkSession.sparkContext.hadoopConfiguration)
     bucketed.repartition(col("bucket")).sortWithinPartitions("bucket", "vec_id")
       .foreachPartition { rows: Iterator[org.apache.spark.sql.Row] =>
-        val fs = new org.apache.hadoop.fs.Path(path)
-          .getFileSystem(conf.value)
+        val fs = StoreFs.of(new org.apache.hadoop.fs.Path(path), conf.value)
         // TASK-COMMIT protocol: each bucket streams to an
         // attempt-unique TEMP name and renames into place only after a
         // clean close — a zombie first attempt or a speculative
@@ -79,26 +78,21 @@ object VectorStore {
           commit()
         } finally if (out != null) { out.close(); fs.delete(tmp, false) }
       }
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(embeddings.sparkSession.sparkContext.hadoopConfiguration)
+    val fs = StoreFs.of(new org.apache.hadoop.fs.Path(path),
+      embeddings.sparkSession.sparkContext.hadoopConfiguration)
     fs.create(new org.apache.hadoop.fs.Path(path,
       VectorBinSource.ReadyMarker), true).close()
   }
 
   /** Materialize-once LSH vector artifact for a testdata sf dir — the
     * `IndexStore.textIndexFor` convention: tmpdir location keyed by
-    * the embeddings file state, built only when the readiness marker
+    * the embeddings file state and graft's code stamp
+    * ([[Sidecar.storeArtifactDir]]), built only when the readiness marker
     * is absent. */
   def lshStoreFor(spark: SparkSession, sfDir: String): String =
     synchronized {
       val src = s"$sfDir/embeddings.parquet"
-      val st = java.nio.file.Files.readAttributes(
-        java.nio.file.Paths.get(src),
-        classOf[java.nio.file.attribute.BasicFileAttributes])
-      val fp = (src, st.size(), st.lastModifiedTime().toMillis).hashCode
-      val out = s"${sys.props("java.io.tmpdir")}/graft_vecstore_" +
-        s"${sfDir.replaceAll("[^A-Za-z0-9]+", "_")}_" +
-        java.lang.Integer.toHexString(fp)
+      val out = Sidecar.storeArtifactDir("vecstore", sfDir, src)
       val ready = java.nio.file.Paths.get(out, VectorBinSource.ReadyMarker)
       if (!java.nio.file.Files.exists(ready))
         saveLshBinary(spark.read.parquet(src), out)

@@ -1,5 +1,7 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.DataFrame
 
 import graft.operators.{Dedup, InvertedIndex, Similarity}
@@ -103,6 +105,54 @@ class BenchArtifactSpec extends SparkSpec {
     Bench.timePass(Seq("q_boom" -> (() => ())), best, failed)
     assert(best.keySet === Set("q_ok", "q_boom"))
     assert(failed.toList === List("q_boom"))
+  }
+
+  test("the result line keeps every field in order and appends cpus last") {
+    val json = Bench.resultJson(1.5, "{\"q01_tokenize\":0.5}", "/d", 3, 2,
+      "warm", "[]", "null", "[]", cpus = 4)
+    val keys = "\"([a-z_0-9]+)\":".r.findAllMatchIn(json).map(_.group(1))
+      .filterNot(_ == "q01_tokenize").toList
+    assert(keys === List("metric", "value", "unit", "queries", "sf", "runs",
+      "agg", "extra_runs_gt2s", "protocol", "heavy_rows", "vs_prev",
+      "failed", "cpus"))
+    assert(json.endsWith(""","failed":[],"cpus":4}"""))
+    assert(Bench.parsePrevQueries(json) === Map("q01_tokenize" -> 0.5))
+  }
+
+  test("a different code stamp misses the store cache and rebuilds identical rows") {
+    import graft.sources.{CodeStamp, IndexStore}
+    def rows(dir: String) = IndexStore.readIndexTable(spark, dir)
+      .orderBy("word").collect().map(_.toString).toSeq
+    def rm(dir: String): Unit = {
+      val walk = java.nio.file.Files.walk(java.nio.file.Paths.get(dir))
+      try walk.iterator().asScala.toSeq.reverse
+        .foreach(java.nio.file.Files.deleteIfExists(_))
+      finally walk.close()
+    }
+    val own = CodeStamp.stamp
+    val built = scala.collection.mutable.ArrayBuffer[String]()
+    try {
+      CodeStamp.stamp = 0x5eed1
+      val older = IndexStore.dsv2IndexFor(spark, testdataDir)
+      built += older
+      CodeStamp.stamp = 0x5eed2
+      val fresh = graft.sources.Sidecar.storeArtifactDir("dsv2idx",
+        testdataDir, s"$testdataDir/documents.parquet")
+      assert(fresh !== older)
+      assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(fresh)),
+        "a fresh stamp found a built store")
+      val newer = IndexStore.dsv2IndexFor(spark, testdataDir)
+      built += newer
+      assert(newer === fresh)
+      assert(java.nio.file.Files.exists(
+        java.nio.file.Paths.get(newer, "_GRAFT_READY")))
+      assert(matches(testdataDir, new java.io.File(newer).getName),
+        "the cold protocol's clear must still find a stamped artifact")
+      assert(rows(newer) === rows(older))
+    } finally {
+      CodeStamp.stamp = own
+      built.foreach(rm)
+    }
   }
 
   test("unrelated tmp entries never match") {

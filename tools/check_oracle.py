@@ -6,7 +6,7 @@ the Spark result parquet, column-sorted by name, exact values.
 Usage: check_oracle.py <sfDir> <verifyOutDir>
 (Driver-side tooling only — the Scala library has no dependency on this.)
 """
-import sys, json, math
+import sys, json, math, re, tempfile
 import duckdb
 
 TABLES = ["region", "nation", "customer", "supplier", "part", "orders",
@@ -74,8 +74,60 @@ def driver_row(rows_match=None, schema_match=None, hash_match=None,
             "hash_match": hash_match, "spark_rows": spark_rows,
             "oracle_rows": oracle_rows, "err": err}
 
-def main(sf_dir, out_dir):
+def bounded_connection(spill_dir):
+    """A DuckDB connection that cannot take the machine's memory: a
+    memory limit of a quarter of RAM (at most 4 GiB), spilling into
+    `spill_dir` (at most 8 GiB there). A query that still does not fit
+    fails with an error, which becomes its `oracle error` row, instead
+    of holding memory for minutes. Insertion order stays preserved:
+    rows are compared in order, and without it DuckDB returned dozens
+    of results (the Spark output reads and oracles with tied ORDER BY
+    keys) with the right rows in another order."""
+    try:
+        with open("/proc/meminfo") as f:
+            kib = next(int(l.split()[1]) for l in f if l.startswith("MemTotal:"))
+    except (OSError, StopIteration, ValueError):
+        kib = 8 << 20
+    limit_mib = max(512, min(4096, kib // 1024 // 4))
     con = duckdb.connect()
+    con.sql(f"SET memory_limit = '{limit_mib}MiB'")
+    con.sql(f"SET temp_directory = '{spill_dir}'")
+    con.sql("SET max_temp_directory_size = '8GiB'")
+    return con
+
+# `WITH name AS (` / `, name AS (`: a common table expression's head.
+CTE_HEAD = re.compile(r"((?:\bWITH\s+|,\s*)[A-Za-z_][A-Za-z0-9_]*\s+AS\s*)\(",
+                      re.I)
+
+def materialized(sql):
+    """`sql` with every common table expression evaluated once. DuckDB
+    1.0 inlines a CTE at each reference, so an oracle whose CTEs refer
+    to earlier ones more than once (q211's power iteration: each step
+    reads the one before twice) plans exponentially many copies and
+    runs for minutes before running out of memory; evaluated once, it
+    takes well under a second. Oracles are deterministic, so the rows
+    are the same."""
+    return CTE_HEAD.sub(lambda m: m.group(1) + "MATERIALIZED (", sql)
+
+def oracle_sql(con, sql):
+    """The form of `sql` to run: CTEs materialized, unless the rewrite
+    does not parse or bind (e.g. a named WINDOW after a comma), in
+    which case the query as written."""
+    m = materialized(sql)
+    if m == sql:
+        return sql
+    try:
+        con.sql(f"DESCRIBE {m}")
+        return m
+    except (duckdb.ParserException, duckdb.BinderException,
+            duckdb.NotImplementedException):
+        return sql
+
+def main(sf_dir, out_dir):
+    with tempfile.TemporaryDirectory(prefix="check_oracle_spill_") as spill:
+        check(bounded_connection(spill), sf_dir, out_dir)
+
+def check(con, sf_dir, out_dir):
     for t in TABLES:
         con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
     oracle = json.load(open(f"{out_dir}/oracle_sql.json"))
@@ -83,7 +135,8 @@ def main(sf_dir, out_dir):
     results = {}
     for name in sorted(oracle):
         try:
-            o = con.sql(oracle[name])
+            sql = oracle_sql(con, oracle[name])
+            o = con.sql(sql)
             ocols, orows = o.columns, o.fetchall()
         except Exception as e:
             print(f"FAIL {name}: oracle error: {str(e)[:300]}")
@@ -112,7 +165,7 @@ def main(sf_dir, out_dir):
                 spark_rows=len(srows), oracle_rows=len(orows),
                 err=f"non-scalar columns: {nonscalar}")
             continue
-        tfails = type_check(name, con, oracle[name], out_dir)
+        tfails = type_check(name, con, sql, out_dir)
         if tfails:
             print(f"FAIL {name}: " + "; ".join(tfails))
             results[name] = driver_row(
