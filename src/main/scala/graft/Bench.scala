@@ -1,24 +1,5 @@
 package graft
 object Bench {
-  /** Anchored matcher for THIS corpus dir's cross-JVM tmp artifacts.
-    * Shape (IndexStore/Sidecar/VectorStore):
-    * `graft_<kind>[_<kind2>]<token>[_<table>]_<hexFingerprint>` with
-    * `<token>` = sfDir sanitized to `[A-Za-z0-9]`→`_` (so it starts
-    * with '_'). The tail after the token admits only an optional
-    * alphabetic table segment plus the 1-8 char lowercase hex
-    * fingerprint — a longer scale token that CONTINUES this one with a
-    * digit (…sf1 vs …sf10) or a dotted scale (…sf1 vs …sf1.5 →
-    * `_sf1_5_`) can never match, so clearing sf1's artifacts leaves
-    * sf10's and sf1.5's intact. */
-  private[graft] def artifactPattern(sfDir: String): scala.util.matching.Regex = {
-    val token = java.util.regex.Pattern.quote(
-      sfDir.replaceAll("[^A-Za-z0-9]+", "_"))
-    // the literal '_' before the token is the kind prefix's trailing
-    // separator ("graft_textindex_" + token); an absolute sfDir's token
-    // starts with '_' too, so real names carry a double underscore there
-    s"graft_[A-Za-z0-9]+(?:_[A-Za-z0-9]+)*_$token(?:_[a-z]+)?_[0-9a-f]{1,8}".r
-  }
-
   /** Parse the per-query seconds out of a committed bench.json (our
     * own flat `"queries":{"name":sec,...}` shape — no JSON library in
     * the Spark-only dependency set). */
@@ -68,42 +49,20 @@ object Bench {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val spark = GraftSession(cpus.toInt, cpus.toInt, logLevel = "WARN")
     // Measurement-protocol pin (round-10 verdict #2): the 10× point
-    // drifted round-over-round because fingerprint-keyed CROSS-JVM
-    // artifacts (the /tmp graft_* demo indexes / sidecar copies /
-    // vector stores, keyed by sanitized corpus path + file-state
-    // fingerprint) persist across runs — a single-pass bench against a
-    // pre-warmed corpus prices reads where a cold run prices builds.
-    // SPARK_GRAFT_BENCH_PROTOCOL=cold deletes every tmpdir artifact
-    // keyed to THIS corpus dir before the first pass, so the run
-    // prices each build exactly once; the value is stamped into the
+    // drifted round-over-round because corpus-keyed CROSS-JVM
+    // artifacts (the demo indexes / sidecar copies / vector stores
+    // under the corpus's artifact root) persist across runs — a
+    // single-pass bench against a pre-warmed corpus prices reads where
+    // a cold run prices builds. SPARK_GRAFT_BENCH_PROTOCOL=cold
+    // deletes THIS corpus's artifact root before the first pass, so
+    // the run prices each build exactly once; the value is stamped into the
     // output JSON so two rounds' points are comparable by inspection.
     // (Session memos always start cold — they die with the JVM.)
     val protocol = sys.env.getOrElse("SPARK_GRAFT_BENCH_PROTOCOL", "warm")
     require(protocol == "warm" || protocol == "cold",
       s"SPARK_GRAFT_BENCH_PROTOCOL must be warm|cold; got '$protocol'")
-    val artifactRe = artifactPattern(sfDir)
-    def clearArtifacts(): Int = {
-      val tmp = java.nio.file.Paths.get(sys.props("java.io.tmpdir"))
-      var cleared = 0
-      val listing = java.nio.file.Files.list(tmp)
-      try {
-        val doomed = listing.iterator()
-        while (doomed.hasNext) {
-          val p = doomed.next()
-          if (artifactRe.pattern.matcher(p.getFileName.toString).matches()) {
-            import scala.jdk.CollectionConverters._
-            val walk = java.nio.file.Files.walk(p)
-            try walk.iterator().asScala.toSeq.reverse
-              .foreach(java.nio.file.Files.deleteIfExists(_))
-            finally walk.close()
-            cleared += 1
-          }
-        }
-      } finally listing.close()
-      cleared
-    }
     if (protocol == "cold")
-      println(s"""{"protocol":"cold","artifacts_cleared":${clearArtifacts()}}""")
+      println(s"""{"protocol":"cold","artifacts_cleared":${graft.sources.ArtifactStore.clearCorpus(sfDir)}}""")
     // JVM/codegen warmup so the first timed query doesn't absorb
     // session + whole-stage-codegen compilation cost (runs the
     // flagship pipeline once on the tiny sf0.001 corpus).
@@ -137,7 +96,7 @@ object Bench {
     // session memos (sketch/codebook/anchor towers), so each sample
     // prices each build exactly once.
     def recoolBetweenPasses(): Unit = if (protocol == "cold") {
-      clearArtifacts(); graft.tools.Memos.clearAll()
+      graft.sources.ArtifactStore.clearCorpus(sfDir); graft.tools.Memos.clearAll()
     }
     val best = scala.collection.mutable.LinkedHashMap[String, Double]()
     val failed = scala.collection.mutable.LinkedHashSet[String]()

@@ -160,51 +160,25 @@ object IndexStore {
       .write.format("graft-index").mode("overwrite").save(dir)
 
   /** Materialize-once cache of the R16 text index for a corpus dir —
-    * q160's build step. Keyed by [[Sidecar.storeArtifactDir]]:
-    * sanitized path + a (path, length, mtime) fingerprint of the source
-    * parquet folded with graft's code stamp, so neither a regenerated
-    * same-path corpus nor a changed build can serve a stale index. The
+    * q160's build step, a [[docsArtifact]]. The store's own
     * `_GRAFT_READY` marker is written only after `writeIndex`'s
-    * post-write empty-letter touch-up, so a concurrent reader never
-    * observes a half-published artifact. */
+    * post-write empty-letter touch-up. */
   def textIndexFor(spark: SparkSession, sfDir: String): String =
-    synchronized {
-      val out = artifactDir("textindex", sfDir)
-      val ready = java.nio.file.Paths.get(out, "_GRAFT_READY")
-      if (!java.nio.file.Files.exists(ready)) {
-        InvertedIndex.writeIndex(Tables(spark, sfDir, "documents"), out)
-        java.nio.file.Files.createFile(ready)
-      }
-      backfillSortedMarker(out)
-      out
+    docsArtifact(spark, "textindex", sfDir) { out =>
+      InvertedIndex.writeIndex(Tables(spark, sfDir, "documents"), out)
+      java.nio.file.Files.createFile(java.nio.file.Paths.get(out, "_GRAFT_READY"))
     }
 
   /** Materialize-once index artifact built through the DSV2 WRITER
-    * (q166's build step) — same fingerprint keying as [[textIndexFor]],
-    * but the artifact is produced by the V2 commit protocol
-    * (`writeIndexTable`) instead of the path sink, so the oracle gate
-    * downstream proves the writer end-to-end. The committer itself
-    * publishes `_GRAFT_READY` last. */
+    * (q166's build step) — a [[docsArtifact]] like [[textIndexFor]],
+    * but produced by the V2 commit protocol (`writeIndexTable`)
+    * instead of the path sink, so the oracle gate downstream proves
+    * the writer end-to-end. */
   def dsv2IndexFor(spark: SparkSession, sfDir: String): String =
-    synchronized {
-      val out = artifactDir("dsv2idx", sfDir)
-      if (!java.nio.file.Files.exists(java.nio.file.Paths.get(out, "_GRAFT_READY")))
-        writeIndexTable(
-          InvertedIndex.postingsUnordered(Tables(spark, sfDir, "documents")), out)
-      backfillSortedMarker(out)
-      out
+    docsArtifact(spark, "dsv2idx", sfDir) { out =>
+      writeIndexTable(
+        InvertedIndex.postingsUnordered(Tables(spark, sfDir, "documents")), out)
     }
-
-  /** Artifacts cached by earlier library versions predate the
-    * `_GRAFT_SORTED` marker; both builders above sort by construction,
-    * so stamping it on a ready artifact is truthful — and keeps their
-    * top-N pushdown alive across the version boundary. */
-  private def backfillSortedMarker(out: String): Unit = {
-    val m = java.nio.file.Paths.get(out, IndexTextSource.SortedMarker)
-    if (java.nio.file.Files.exists(java.nio.file.Paths.get(out, "_GRAFT_READY"))
-        && !java.nio.file.Files.exists(m))
-      java.nio.file.Files.createFile(m)
-  }
 
   // ---- Incremental maintenance: LSM-style deltas + compaction --------
   //
@@ -397,29 +371,22 @@ object IndexStore {
     * `deleteWhere` rewrites only the `letter=t` files. The oracle
     * rebuilds the survivor set from the raw corpus, so a green row
     * gates the whole metadata-delete path end-to-end. */
-  def deleteDemoFor(spark: SparkSession, sfDir: String): String = synchronized {
-    val out = artifactDir("delidx", sfDir)
-    val done = java.nio.file.Paths.get(out, "_DEMO_READY")
-    if (!java.nio.file.Files.exists(done)) {
+  def deleteDemoFor(spark: SparkSession, sfDir: String): String =
+    docsArtifact(spark, "delidx", sfDir) { out =>
       writeIndexTable(
         InvertedIndex.postingsUnordered(Tables(spark, sfDir, "documents")), out)
       val f = new java.io.File(out)
       val cat = GraftCatalog.registerFor(spark, "graft_delcat", f.getParent)
       spark.sql(s"DELETE FROM $cat.`${f.getName}` WHERE word LIKE 't%'")
-      java.nio.file.Files.createFile(done)
     }
-    out
-  }
 
   /** q184's artifact: a HALF-corpus index synced to the full corpus by
     * one catalog-SQL MERGE INTO (upsert changed words, insert new
     * ones, delete words the source no longer has) through the
     * row-level-operation rewrite — the DML answer to the LSM delta
     * path (q171): same end state, one declarative statement. */
-  def mergeDemoFor(spark: SparkSession, sfDir: String): String = synchronized {
-    val out = artifactDir("mergeidx", sfDir)
-    val done = java.nio.file.Paths.get(out, "_DEMO_READY")
-    if (!java.nio.file.Files.exists(done)) {
+  def mergeDemoFor(spark: SparkSession, sfDir: String): String =
+    docsArtifact(spark, "mergeidx", sfDir) { out =>
       val docs = Tables(spark, sfDir, "documents")
       writeIndexTable(
         InvertedIndex.postingsUnorderedSlice(docs, col("doc_id") % 2 === 0), out)
@@ -437,10 +404,7 @@ object IndexStore {
            |WHEN NOT MATCHED THEN
            |  INSERT (word, df, postings) VALUES (s.word, s.df, s.postings)
            |WHEN NOT MATCHED BY SOURCE THEN DELETE""".stripMargin)
-      java.nio.file.Files.createFile(done)
     }
-    out
-  }
 
   /** Materialize-once demo artifacts for the delta family (q171/q172):
     * base = even doc_ids, one delta epoch = odd doc_ids — so the
@@ -487,10 +451,8 @@ object IndexStore {
     * touches). A tiny common-word vocabulary would otherwise yield
     * only `grown` — every class here is MANUFACTURED by DML, not
     * hoped for from the data. */
-  def versionDiffDemoFor(spark: SparkSession, sfDir: String): String = synchronized {
-    val out = artifactDir("vdidx", sfDir)
-    val done = java.nio.file.Paths.get(out, "_DEMO_READY")
-    if (!java.nio.file.Files.exists(done)) {
+  def versionDiffDemoFor(spark: SparkSession, sfDir: String): String =
+    docsArtifact(spark, "vdidx", sfDir) { out =>
       val docs = Tables(spark, sfDir, "documents")
       // slices ride the full corpus's shared (doc_id, word) leaf — one
       // tokenize for the whole four-quarter history (round 15)
@@ -528,10 +490,7 @@ object IndexStore {
           .stripMargin)
       writeIndexDelta(quarterPostings(3), out, epoch = 3L)
       compact(spark, out, retainGeneration = true) // gen 2 = post-DML state
-      java.nio.file.Files.createFile(done)
     }
-    out
-  }
 
   /** q258 — VERSION DIFF between two generations of a stored index:
     * the CDC read every lake table eventually needs ("what changed
@@ -562,11 +521,8 @@ object IndexStore {
       .orderBy("word")
 
   private def demoArtifact(spark: SparkSession, sfDir: String,
-      kind: String, compactAfter: Boolean,
-      retain: Boolean = false): String = synchronized {
-    val out = artifactDir(kind, sfDir)
-    val done = java.nio.file.Paths.get(out, "_DEMO_READY")
-    if (!java.nio.file.Files.exists(done)) {
+      kind: String, compactAfter: Boolean, retain: Boolean = false): String =
+    docsArtifact(spark, kind, sfDir) { out =>
       val docs = Tables(spark, sfDir, "documents")
       writeIndexTable(
         InvertedIndex.postingsUnorderedSlice(docs, col("doc_id") % 2 === 0), out)
@@ -574,13 +530,13 @@ object IndexStore {
         InvertedIndex.postingsUnorderedSlice(docs, col("doc_id") % 2 === 1),
         out, epoch = 1L)
       if (compactAfter) compact(spark, out, retainGeneration = retain)
-      java.nio.file.Files.createFile(done)
     }
-    out
-  }
 
-  /** Every artifact here is built from the corpus's documents; the
-    * key is [[Sidecar.storeArtifactDir]]'s (corpus state, code stamp). */
-  private def artifactDir(kind: String, sfDir: String): String =
-    Sidecar.storeArtifactDir(kind, sfDir, s"$sfDir/documents.parquet")
+  /** Every `*For` artifact here is built once ([[ArtifactStore.once]])
+    * from the corpus's documents, keyed by their file state and
+    * graft's code stamp ([[ArtifactStore.corpusDir]]). */
+  private def docsArtifact(spark: SparkSession, kind: String, sfDir: String)(
+      build: String => Unit): String =
+    ArtifactStore.once(spark, ArtifactStore.corpusDir(
+      kind, sfDir, s"$sfDir/documents.parquet"))(build)
 }

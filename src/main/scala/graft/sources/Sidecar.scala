@@ -1,6 +1,6 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, DataFrameReader, DataFrameWriter, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Non-parquet file sources as FIRST-CLASS gated surfaces: a table is
   * materialized once per (format, sf dir) as CSV / JSON-lines in the
@@ -23,91 +23,38 @@ import org.apache.spark.sql.{DataFrame, DataFrameReader, DataFrameWriter, Row, S
   *    writer and reader pin a 6-digit fractional pattern (applies to
   *    TIMESTAMP and TIMESTAMP_NTZ columns alike).
   *
-  * The text copy is written once (guarded by Spark's own _SUCCESS
-  * marker) and reused across queries in the session — mirroring a lake
-  * where the CSV/JSON landing zone already exists.
+  * The text copy is written once ([[ArtifactStore.once]]) and reused
+  * across queries and JVMs — mirroring a lake where the CSV/JSON
+  * landing zone already exists.
   */
 object Sidecar {
 
   private val TsFmt = "yyyy-MM-dd'T'HH:mm:ss.SSSSSS"
+  private val TsOpts =
+    Map("timestampFormat" -> TsFmt, "timestampNTZFormat" -> TsFmt)
 
-  /** Cache path keyed by the FULL sanitized sf dir (a 32-bit hashCode
-    * can collide two sf dirs onto one cache — silently serving the
-    * wrong corpus; the sanitized string cannot) PLUS a fingerprint of
-    * the source parquet's (path, length, mtime) files: the copy
-    * persists in tmpdir across JVM runs, and the parquet at the same
-    * path is regenerated between driver rounds — without the
-    * data-version component the stale previous corpus would be served
-    * and an oracle mismatch would masquerade as a text round-trip
-    * defect (same reason Similarity's PQ memo keys on fileStateHash). */
-  private def path(fmt: String, sfDir: String, name: String) =
-    s"${sys.props("java.io.tmpdir")}/graft_sidecar_${fmt}_" +
-      s"${sfDir.replaceAll("[^A-Za-z0-9]+", "_")}_${name}_" +
-      java.lang.Integer.toHexString(sourceFingerprint(s"$sfDir/$name.parquet"))
-
-  /** Order-stable hash of every file under the source path as
-    * (relative path, length, mtime) — plain java.io so it works on the
-    * local paths the sidecar serves (cluster deployments would key on
-    * the catalog snapshot/transaction id instead). */
-  private[graft] def sourceFingerprint(src: String): Int = {
-    def walk(f: java.io.File): Seq[java.io.File] =
-      if (f.isDirectory)
-        Option(f.listFiles()).map(_.toSeq.sortBy(_.getName).flatMap(walk))
-          .getOrElse(Nil)
-      else Seq(f)
-    walk(new java.io.File(src))
-      .map(f => (f.getPath.stripPrefix(src), f.length(), f.lastModified()))
-      .hashCode()
-  }
-
-  /** `<tmpdir>/graft_<kind>_<sanitized sfDir>_<hex>`: where a
-    * materialize-once store artifact built from `src` persists across
-    * JVMs. The hex folds the source's file-state fingerprint with
-    * [[CodeStamp]], so neither a regenerated corpus nor a changed graft
-    * build is ever served an artifact an older one wrote. */
-  private[graft] def storeArtifactDir(kind: String, sfDir: String,
-      src: String): String =
-    s"${sys.props("java.io.tmpdir")}/graft_${kind}_" +
-      s"${sfDir.replaceAll("[^A-Za-z0-9]+", "_")}_" +
-      java.lang.Integer.toHexString((sourceFingerprint(src), CodeStamp.stamp).hashCode)
-
-  private def timestamped[T](rw: Either[DataFrameReader, DataFrameWriter[Row]]) =
-    rw match {
-      case Left(r) => Left(r.option("timestampFormat", TsFmt)
-        .option("timestampNTZFormat", TsFmt))
-      case Right(w) => Right(w.option("timestampFormat", TsFmt)
-        .option("timestampNTZFormat", TsFmt))
-    }
-
-  /** Write-once, concurrency-safe: the copy is produced in a
-    * process-unique staging dir and published with an atomic rename —
-    * two JVMs racing (`synchronized` only guards one) each build their
-    * own staging copy and exactly one rename wins; the loser discards
-    * its staging dir and reads the winner's. */
-  private def materialize(df: DataFrame, fmt: String, out: String): Unit =
-    synchronized {
-      val target = java.nio.file.Paths.get(out)
-      if (!java.nio.file.Files.exists(target.resolve("_SUCCESS"))) {
-        val staging = s"$out.tmp.${java.lang.ProcessHandle.current().pid()}"
-        val Right(w) = timestamped(Right(df.write.mode("overwrite")))
-        fmt match {
-          case "csv" => w.option("header", "true").csv(staging)
-          case "json" => w.json(staging)
-          case "gzjson" => w.option("compression", "gzip").json(staging)
-          case "zstdpq" => w.option("compression", "zstd").parquet(staging)
-          case "xml" => w.option("rowTag", "row").xml(staging)
-          case "orc" => w.orc(staging)
-          case "avro" => w.format("org.apache.spark.sql.avro.AvroFileFormat").save(staging)
-        }
-        try java.nio.file.Files.move(java.nio.file.Paths.get(staging), target,
-          java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-        catch { case _: java.nio.file.FileSystemException =>
-          // another JVM published first — serve its copy
-          def rm(f: java.io.File): Unit = {
-            Option(f.listFiles()).foreach(_.foreach(rm)); f.delete()
-          }
-          rm(new java.io.File(staging))
-        }
+  /** The `fmt` copy of `name`, written once through
+    * [[ArtifactStore.once]] under the corpus's artifact root and keyed
+    * by the source parquet's file state and graft's code stamp: the
+    * parquet at the same path is regenerated between runs, and without
+    * the data-version component the stale previous corpus would be
+    * served and an oracle mismatch would masquerade as a text
+    * round-trip defect. `kind` names the layout when it is more than
+    * the format (the gz copy's member count). */
+  private def materialize(df: DataFrame, sfDir: String, name: String,
+      fmt: String, kind: String = ""): String =
+    ArtifactStore.once(df.sparkSession, ArtifactStore.corpusDir(
+        s"sidecar_${if (kind.isEmpty) fmt else kind}_$name", sfDir,
+        s"$sfDir/$name.parquet")) { out =>
+      val w = df.write.mode("overwrite").options(TsOpts)
+      fmt match {
+        case "csv" => w.option("header", "true").csv(out)
+        case "json" => w.json(out)
+        case "gzjson" => w.option("compression", "gzip").json(out)
+        case "zstdpq" => w.option("compression", "zstd").parquet(out)
+        case "xml" => w.option("rowTag", "row").xml(out)
+        case "orc" => w.orc(out)
+        case "avro" => w.format("org.apache.spark.sql.avro.AvroFileFormat").save(out)
       }
     }
 
@@ -119,22 +66,17 @@ object Sidecar {
     * halves — silently wrong aggregates, not a parse error. */
   def csv(spark: SparkSession, sfDir: String, name: String): DataFrame = {
     val pq = Tables(spark, sfDir, name)
-    val out = path("csv", sfDir, name)
-    materialize(pq, "csv", out)
-    val Left(r) = timestamped(Left(spark.read.option("header", "true")
+    spark.read.options(TsOpts).option("header", "true")
       .option("multiLine", "true")
-      .schema(pq.schema)))
-    r.csv(out)
+      .schema(pq.schema).csv(materialize(pq, sfDir, name, "csv"))
   }
 
   /** `name` served from a JSON-lines copy with the parquet schema
     * applied on read. */
   def jsonl(spark: SparkSession, sfDir: String, name: String): DataFrame = {
     val pq = Tables(spark, sfDir, name)
-    val out = path("json", sfDir, name)
-    materialize(pq, "json", out)
-    val Left(r) = timestamped(Left(spark.read.schema(pq.schema)))
-    r.json(out)
+    spark.read.options(TsOpts).schema(pq.schema)
+      .json(materialize(pq, sfDir, name, "json"))
   }
 
   /** `name` served from a MULTI-FILE gzip JSONL copy — the compressed
@@ -170,10 +112,8 @@ object Sidecar {
       else spark.conf.get("spark.graft.gzTargetMemberBytes",
         DefaultGzTargetMemberBytes.toString).toLong
     val parts = gzParts(sourceBytes(s"$sfDir/$name.parquet"), target)
-    val out = path(s"gzjson$parts", sfDir, name)
-    materialize(pq.repartition(parts), "gzjson", out)
-    val Left(r) = timestamped(Left(spark.read.schema(pq.schema)))
-    r.json(out)
+    spark.read.options(TsOpts).schema(pq.schema).json(
+      materialize(pq.repartition(parts), sfDir, name, "gzjson", s"gzjson$parts"))
   }
 
   /** The 100 TB landing rule as a default: ≤128 MB per gzip member, so
@@ -219,9 +159,8 @@ object Sidecar {
     * formats. */
   def zstdParquet(spark: SparkSession, sfDir: String, name: String): DataFrame = {
     val pq = Tables(spark, sfDir, name)
-    val out = path("zstdpq", sfDir, name)
-    materialize(pq, "zstdpq", out)
-    spark.read.schema(pq.schema).parquet(out)
+    spark.read.schema(pq.schema)
+      .parquet(materialize(pq, sfDir, name, "zstdpq"))
   }
 
   /** `name` served from an XML copy (Spark 4's NATIVE xml source —
@@ -236,13 +175,10 @@ object Sidecar {
     * original, which the oracle gate checks through the polyhash sum. */
   def xml(spark: SparkSession, sfDir: String, name: String): DataFrame = {
     val pq = Tables(spark, sfDir, name)
-    val out = path("xml", sfDir, name)
-    materialize(pq, "xml", out)
-    val Left(r) = timestamped(Left(spark.read
+    spark.read.options(TsOpts)
       .option("rowTag", "row")
       .option("ignoreSurroundingSpaces", "false")
-      .schema(pq.schema)))
-    r.xml(out)
+      .schema(pq.schema).xml(materialize(pq, sfDir, name, "xml"))
   }
 
   /** `name` served from an ORC copy (Spark-native columnar source —
@@ -254,9 +190,7 @@ object Sidecar {
     * parquet schema rather than ORC's embedded one. */
   def orc(spark: SparkSession, sfDir: String, name: String): DataFrame = {
     val pq = Tables(spark, sfDir, name)
-    val out = path("orc", sfDir, name)
-    materialize(pq, "orc", out)
-    spark.read.schema(pq.schema).orc(out)
+    spark.read.schema(pq.schema).orc(materialize(pq, sfDir, name, "orc"))
   }
 
   /** `name` served from an Avro copy (the row-oriented interchange
@@ -272,10 +206,9 @@ object Sidecar {
     * "external data source module". */
   def avro(spark: SparkSession, sfDir: String, name: String): DataFrame = {
     val pq = Tables(spark, sfDir, name)
-    val out = path("avro", sfDir, name)
-    materialize(pq, "avro", out)
     spark.read.schema(pq.schema)
-      .format("org.apache.spark.sql.avro.AvroFileFormat").load(out)
+      .format("org.apache.spark.sql.avro.AvroFileFormat")
+      .load(materialize(pq, sfDir, name, "avro"))
   }
 
   /** `documents` served from a TWO-GENERATION evolved parquet layout —
@@ -291,50 +224,21 @@ object Sidecar {
     * a CSV-shaped mental model walks into). Scale note: footer
     * reconciliation is a per-FILE planning cost, not per-row; a
     * production table pins the merged schema in its catalog instead —
-    * the read semantics gated here are identical either way. Same
-    * staging + atomic-rename publication discipline as
-    * [[materialize]], with a root `_SUCCESS` stamped only after BOTH
-    * generations land (a reader can never see one generation of a
-    * half-published copy). */
+    * the read semantics gated here are identical either way. Built
+    * through [[ArtifactStore.once]] like every copy here, so a reader
+    * never sees one generation of a half-built copy. */
   def evolvedDocuments(spark: SparkSession, sfDir: String): DataFrame = {
     import org.apache.spark.sql.functions.col
     val pq = Tables(spark, sfDir, "documents")
-    val out = path("evolved", sfDir, "documents")
-    synchronized {
-      val target = java.nio.file.Paths.get(out)
-      if (!java.nio.file.Files.exists(target.resolve("_SUCCESS"))) {
-        val staging = s"$out.tmp.${java.lang.ProcessHandle.current().pid()}"
-        val gen0Cols = pq.columns.filterNot(_ == "lang").reverse.map(col)
-        pq.where(col("doc_id") % 2 === 0).select(gen0Cols.toSeq: _*)
-          .write.mode("overwrite").parquet(s"$staging/gen0")
-        pq.where(col("doc_id") % 2 =!= 0)
-          .write.mode("overwrite").parquet(s"$staging/gen1")
-        try {
-          java.nio.file.Files.createFile(
-            java.nio.file.Paths.get(staging).resolve("_SUCCESS"))
-          java.nio.file.Files.move(java.nio.file.Paths.get(staging), target,
-            java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-        } catch { case _: java.nio.file.FileSystemException =>
-          def rm(f: java.io.File): Unit = {
-            Option(f.listFiles()).foreach(_.foreach(rm)); f.delete()
-          }
-          rm(new java.io.File(staging))
-        }
-      }
+    val out = ArtifactStore.once(spark, ArtifactStore.corpusDir(
+        "sidecar_evolved_documents", sfDir, s"$sfDir/documents.parquet")) { d =>
+      val gen0Cols = pq.columns.filterNot(_ == "lang").reverse.map(col)
+      pq.where(col("doc_id") % 2 === 0).select(gen0Cols.toSeq: _*)
+        .write.mode("overwrite").parquet(s"$d/gen0")
+      pq.where(col("doc_id") % 2 =!= 0)
+        .write.mode("overwrite").parquet(s"$d/gen1")
     }
     spark.read.option("mergeSchema", "true")
       .parquet(s"$out/gen0", s"$out/gen1")
   }
-}
-
-/** graft's own code source — its jar, or its class directory under a
-  * build tool — fingerprinted once per JVM by
-  * [[Sidecar.sourceFingerprint]]. A `var` only so a spec can stand in
-  * for a rebuilt jar. */
-private[graft] object CodeStamp {
-  @volatile var stamp: Int =
-    Option(getClass.getProtectionDomain.getCodeSource)
-      .map(cs => Sidecar.sourceFingerprint(
-        new java.io.File(cs.getLocation.toURI).getPath))
-      .getOrElse(0)
 }

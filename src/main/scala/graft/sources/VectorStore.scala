@@ -84,20 +84,15 @@ object VectorStore {
       VectorBinSource.ReadyMarker), true).close()
   }
 
-  /** Materialize-once LSH vector artifact for a testdata sf dir — the
-    * `IndexStore.textIndexFor` convention: tmpdir location keyed by
-    * the embeddings file state and graft's code stamp
-    * ([[Sidecar.storeArtifactDir]]), built only when the readiness marker
-    * is absent. */
-  def lshStoreFor(spark: SparkSession, sfDir: String): String =
-    synchronized {
-      val src = s"$sfDir/embeddings.parquet"
-      val out = Sidecar.storeArtifactDir("vecstore", sfDir, src)
-      val ready = java.nio.file.Paths.get(out, VectorBinSource.ReadyMarker)
-      if (!java.nio.file.Files.exists(ready))
-        saveLshBinary(spark.read.parquet(src), out)
-      out
-    }
+  /** Materialize-once LSH vector artifact for a corpus dir — the
+    * `IndexStore.textIndexFor` convention: built once
+    * ([[ArtifactStore.once]]) under the corpus's artifact root, keyed
+    * by the embeddings' file state and graft's code stamp. */
+  def lshStoreFor(spark: SparkSession, sfDir: String): String = {
+    val src = s"$sfDir/embeddings.parquet"
+    ArtifactStore.once(spark, ArtifactStore.corpusDir("vecstore", sfDir, src))(
+      saveLshBinary(spark.read.parquet(src), _))
+  }
 
   /** Train PQ on the corpus and persist codebooks + codes. */
   def savePq(embeddings: DataFrame, path: String): Unit = {

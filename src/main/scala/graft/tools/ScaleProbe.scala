@@ -3,6 +3,8 @@ package graft.tools
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.sources.ArtifactStore
+
 /** Per-query SCALING-EXPONENT measurement for the heavy dedup rows
   * (round-7 verdict #4): runs q58 / q123 / q22 / q91 / q191 at three
   * corpus scales — sf0.01 (0.1×), sf0.1 (1×), and a synthesized 10×
@@ -19,8 +21,8 @@ import org.apache.spark.sql.functions._
   * replicas mutually disjoint (no cross-replica candidate can arise),
   * so candidate volume, bucket occupancy, and component structure all
   * scale by precisely 10 — scale is the ONLY variable. doc_ids remap
-  * to k·N + id. Built once under target/ (repo-local), fingerprinted
-  * by the source file state.
+  * to k·N + id. Built once ([[ArtifactStore.once]]) under the source
+  * corpus's artifact root.
   *
   * Every (query, scale) run CLEARS the session artifact memos first —
   * the exponent must price the full operator including its sketch
@@ -49,20 +51,12 @@ object ScaleProbe {
     val spark = graft.GraftSession(cpus.toInt, 32)
 
     val base = "/root/testdata/sf0.1/documents.parquet"
-    val tenXPath = {
-      val st = java.nio.file.Files.readAttributes(
-        java.nio.file.Paths.get(base),
-        classOf[java.nio.file.attribute.BasicFileAttributes])
-      val fp = java.lang.Integer.toHexString(
-        (base, st.size(), st.lastModifiedTime().toMillis).hashCode)
-      val out = s"/root/repo/target/scaleprobe/documents10x_$fp"
-      if (!java.nio.file.Files.exists(java.nio.file.Paths.get(out, "_SUCCESS"))) {
-        val docs = spark.read.parquet(base)
-        val n = docs.agg(max(col("doc_id"))).collect()(0).getLong(0) + 1
-        replicate(docs, 10, n)
-          .repartition(32).write.mode("overwrite").parquet(out)
-      }
-      out
+    val tenXPath = ArtifactStore.once(spark, ArtifactStore.corpusDir(
+        "documents10x", new java.io.File(base).getParent, base)) { out =>
+      val docs = spark.read.parquet(base)
+      val n = docs.agg(max(col("doc_id"))).collect()(0).getLong(0) + 1
+      replicate(docs, 10, n)
+        .repartition(32).write.mode("overwrite").parquet(out)
     }
 
     def docsAt(scale: String): DataFrame = scale match {

@@ -3,6 +3,8 @@ package graft.tools
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.sources.ArtifactStore
+
 /** Synthesize a FULL 10× corpus — every table, not just documents —
   * so the WHOLE 257-query suite can be benched at 10× sf0.1 and a
   * full-suite scaling point committed beside bench.json (round-8
@@ -34,9 +36,8 @@ import org.apache.spark.sql.functions._
   *    LSH cells like genuinely new data, instead of 10 exact copies
   *    stacking every bucket 10 deep).
   *
-  * Built once under target/ (repo-local), fingerprinted by the source
-  * sf dir's file state (the Sidecar discipline); prints the dir for
-  * the bench driver:
+  * Built once ([[ArtifactStore.once]]) under the source corpus's
+  * artifact root; prints the dir for the bench driver:
   * `SPARK_GRAFT_SF_DIR=$(runMain graft.tools.TenX) runMain graft.Bench`.
   */
 object TenX {
@@ -56,13 +57,13 @@ object TenX {
     out.select(df.columns.map(col).toSeq: _*)
   }
 
-  def build(spark: SparkSession, srcDir: String, copies: Int = 10): String = {
-    val fp = java.lang.Integer.toHexString(
-      graft.sources.Sidecar.sourceFingerprint(srcDir))
-    val out = s"/root/repo/target/tenx/${copies}x_$fp"
-    val done = java.nio.file.Paths.get(s"$out/_TENX_DONE")
-    if (java.nio.file.Files.exists(done)) return out
+  def build(spark: SparkSession, srcDir: String, copies: Int = 10): String =
+    ArtifactStore.once(spark,
+      ArtifactStore.corpusDir(s"tenx$copies", srcDir, srcDir))(
+      replicateInto(spark, srcDir, copies, _))
 
+  private def replicateInto(spark: SparkSession, srcDir: String,
+      copies: Int, out: String): Unit = {
     def t(name: String) = spark.read.parquet(s"$srcDir/$name.parquet")
     def write(df: DataFrame, name: String): Unit =
       df.repartition(32).write.mode("overwrite")
@@ -105,9 +106,6 @@ object TenX {
             (pmod(i + col("k"), lit(d)) + 1).cast("int"))).as("embedding"),
         col("label"))
     write(rot, "embeddings")
-
-    java.nio.file.Files.createFile(done)
-    out
   }
 
   def main(args: Array[String]): Unit = {

@@ -94,6 +94,35 @@ class ArtifactStoreSpec extends SparkSpec {
     } finally spark.conf.unset("spark.graft.artifactDir")
   }
 
+  test("a changed code stamp misses the stored artifact and rebuilds identical rows") {
+    import org.apache.spark.sql.functions.col
+    import graft.sources.CodeStamp
+    val root = Files.createTempDirectory("graft_stamp_store").toString
+    spark.conf.set("spark.graft.artifactDir", root)
+    val own = CodeStamp.stamp
+    try {
+      val key = spark.read.parquet(corpusPath)
+      def served() = ArtifactStore.loadOrBuild("stamp_probe", key, "p=1")(
+        key.select(col("doc_id"), (col("doc_id") * 3).as("v")))
+        .collect().map(_.toString).sorted.toList
+      CodeStamp.stamp = 0x5eed1
+      val (h0, m0) = counters
+      val first = served()
+      assert(served() === first)
+      assert(counters === ((h0 + 1, m0 + 1)), "one stamp: build once, then load")
+      // a rebuilt graft: the key changes, so the old artifact is
+      // unreachable and the rows are built again
+      CodeStamp.stamp = 0x5eed2
+      assert(served() === first)
+      assert(counters === ((h0 + 1, m0 + 2)), "a new stamp must rebuild")
+      assert(new java.io.File(root).listFiles()
+        .count(f => f.isDirectory && f.getName.startsWith("stamp_probe-")) === 2)
+    } finally {
+      CodeStamp.stamp = own
+      spark.conf.unset("spark.graft.artifactDir")
+    }
+  }
+
   test("BPE training artifact: the (merges, encoder) pair persists across sessions") {
     Memos.clearAll()
     spark.conf.set("spark.graft.artifactDir", storeDir)

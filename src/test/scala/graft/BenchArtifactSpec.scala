@@ -5,19 +5,38 @@ import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.DataFrame
 
 import graft.operators.{Dedup, InvertedIndex, Similarity}
-import graft.sources.Tables
+import graft.sources.{ArtifactStore, Tables}
 import graft.tools.Memos
 
 /** Pins the cold protocol's two resets: `Memos.clearAll` (session
-  * towers) and the artifact matcher (Bench.artifactPattern):
-  * the clear for one corpus dir must hit every artifact shape the
-  * sources actually write for THAT dir and none of a sibling scale's —
-  * the earlier bare-substring match deleted /root/testdata/sf10's
-  * artifacts when clearing for /root/testdata/sf1. */
+  * towers) and the corpus clear (`ArtifactStore.clearCorpus`): the
+  * clear for one corpus dir must remove every artifact kind the
+  * sources write for THAT dir and nothing of a sibling scale's — an
+  * earlier bare-substring match deleted sf10's artifacts when clearing
+  * for sf1. */
 class BenchArtifactSpec extends SparkSpec {
 
-  private def matches(sfDir: String, name: String): Boolean =
-    Bench.artifactPattern(sfDir).pattern.matcher(name).matches()
+  /** A corpus path of its own per spec run, so clearing it can never
+    * touch a real corpus's artifacts. */
+  private val scratch = s"/graft_clear_spec_${java.util.UUID.randomUUID()}"
+
+  /** Every artifact kind a corpus root holds, as the builders name them. */
+  private val kinds = Seq("textindex", "dsv2idx", "delidx", "mergeidx",
+    "deltaidx", "compactidx", "ttidx", "vdidx", "vecstore",
+    "sidecar_csv_lineitem", "sidecar_json_events", "sidecar_gzjson8_documents",
+    "sidecar_zstdpq_documents", "sidecar_xml_documents", "sidecar_orc_orders",
+    "sidecar_avro_documents", "sidecar_evolved_documents", "tenx10",
+    "documents10x")
+
+  /** Stand-ins for built artifacts: each kind's keyed dir, marked done. */
+  private def plant(sfDir: String): Seq[java.nio.file.Path] =
+    kinds.map { k =>
+      val d = java.nio.file.Paths.get(
+        ArtifactStore.corpusDir(k, sfDir, s"$sfDir/documents.parquet"))
+      java.nio.file.Files.createDirectories(d)
+      java.nio.file.Files.createFile(d.resolve(ArtifactStore.DoneMarker))
+      d
+    }
 
   test("Memos.clearAll drops every tower; the next call rebuilds identical rows") {
     // The cold protocol's claim — "every pass prices builds" — needs
@@ -45,36 +64,30 @@ class BenchArtifactSpec extends SparkSpec {
     Memos.clearAll()
   }
 
-  test("matches every real artifact shape for the target dir") {
-    val d = "/root/testdata/sf0.1"
-    // the REAL shape: kind prefix ends with '_' and an absolute dir's
-    // token starts with '_', so names carry a double underscore
-    val t = "__root_testdata_sf0_1"
-    // IndexStore materialize-once artifacts: graft_<kind>_<token>_<hex>
-    for (kind <- Seq("textindex", "dsv2idx", "delidx", "mergeidx",
-                     "deltaidx", "compactidx", "ttidx", "vdidx"))
-      assert(matches(d, s"graft_$kind${t}_1a2b3c4d"), kind)
-    // VectorStore: same shape
-    assert(matches(d, s"graft_vecstore${t}_ffffffff"))
-    // Sidecar copies: graft_sidecar_<fmt>_<token>_<table>_<hex>
-    for (fmt <- Seq("csv", "json", "xml", "orc", "avro"))
-      assert(matches(d, s"graft_sidecar_$fmt${t}_documents_9"), fmt)
-    // short (positive-int) fingerprints too
-    assert(matches(d, s"graft_textindex${t}_7f"))
+  test("clearing a corpus removes every artifact kind built for it") {
+    val d = s"$scratch/sf0.1"
+    val built = plant(d)
+    assert(built.map(_.getParent).distinct ===
+      Seq(java.nio.file.Paths.get(ArtifactStore.corpusRoot(d))),
+      "every kind must live under the one corpus root")
+    assert(ArtifactStore.clearCorpus(d) === kinds.size)
+    assert(built.forall(!java.nio.file.Files.exists(_)))
+    assert(ArtifactStore.clearCorpus(d) === 0, "a cleared corpus holds nothing")
   }
 
   test("sf1 clear leaves sf10 and sf1.5 artifacts intact") {
-    val sf1 = "/root/testdata/sf1"
-    // sf10's token continues sf1's with a digit — must NOT match
-    assert(!matches(sf1, "graft_textindex__root_testdata_sf10_1a2b3c4d"))
-    assert(!matches(sf1, "graft_sidecar_csv__root_testdata_sf10_documents_9f"))
-    // sf1.5 sanitizes to _sf1_5 — the '5' segment is not alphabetic,
-    // so it cannot be mistaken for a table-name segment
-    assert(!matches(sf1, "graft_textindex__root_testdata_sf1_5_1a2b3c4d"))
-    assert(!matches(sf1, "graft_sidecar_csv__root_testdata_sf1_5_documents_9f"))
-    // and sf1's own artifacts still match
-    assert(matches(sf1, "graft_textindex__root_testdata_sf1_1a2b3c4d"))
-    assert(matches(sf1, "graft_sidecar_csv__root_testdata_sf1_documents_9f"))
+    val sf1 = s"$scratch/sf1"
+    // sf10's root continues sf1's with a digit, sf1.5's sanitizes to
+    // `_sf1_5`: neither is sf1's root
+    val others = Seq(s"$scratch/sf10", s"$scratch/sf1.5")
+    try {
+      val kept = others.flatMap(plant)
+      val gone = plant(sf1)
+      assert(ArtifactStore.clearCorpus(sf1) === kinds.size)
+      assert(gone.forall(!java.nio.file.Files.exists(_)))
+      assert(kept.forall(d => java.nio.file.Files.exists(
+        d.resolve(ArtifactStore.DoneMarker))))
+    } finally others.foreach(ArtifactStore.clearCorpus)
   }
 
   test("vs_prev parser reads the committed bench.json shape") {
@@ -136,7 +149,7 @@ class BenchArtifactSpec extends SparkSpec {
       val older = IndexStore.dsv2IndexFor(spark, testdataDir)
       built += older
       CodeStamp.stamp = 0x5eed2
-      val fresh = graft.sources.Sidecar.storeArtifactDir("dsv2idx",
+      val fresh = ArtifactStore.corpusDir("dsv2idx",
         testdataDir, s"$testdataDir/documents.parquet")
       assert(fresh !== older)
       assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(fresh)),
@@ -146,7 +159,8 @@ class BenchArtifactSpec extends SparkSpec {
       assert(newer === fresh)
       assert(java.nio.file.Files.exists(
         java.nio.file.Paths.get(newer, "_GRAFT_READY")))
-      assert(matches(testdataDir, new java.io.File(newer).getName),
+      assert(new java.io.File(newer).getParent ===
+        ArtifactStore.corpusRoot(testdataDir),
         "the cold protocol's clear must still find a stamped artifact")
       assert(rows(newer) === rows(older))
     } finally {
@@ -155,11 +169,22 @@ class BenchArtifactSpec extends SparkSpec {
     }
   }
 
-  test("unrelated tmp entries never match") {
-    val d = "/root/testdata/sf0.1"
-    assert(!matches(d, "graft_wh12345"))                 // spec warehouses
-    assert(!matches(d, "spark-abc123"))                  // spark scratch
-    assert(!matches(d, "graft_index"))                   // demo default out
-    assert(!matches(d, "graft_textindex__root_testdata_sf0_01_1a2b"))
+  test("unrelated tmp entries survive a corpus clear") {
+    val tmp = java.nio.file.Paths.get(sys.props("java.io.tmpdir"))
+    val d = s"$scratch/sf0.1"
+    // a spec warehouse, Spark scratch, a demo's default output, and a
+    // lookalike of the corpus root outside the artifact tree
+    val bystanders = Seq("graft_wh", "spark-", "graft_index",
+      ArtifactStore.corpusRoot(d).split('/').last).map(p =>
+      java.nio.file.Files.createTempDirectory(tmp, p))
+    try {
+      plant(d)
+      assert(ArtifactStore.clearCorpus(d) === kinds.size)
+      assert(bystanders.forall(java.nio.file.Files.exists(_)))
+      assert(java.nio.file.Files.exists(
+        java.nio.file.Paths.get(ArtifactStore.corpusRoot(d)).getParent),
+        "the shared artifact tree outlives one corpus's clear")
+    } finally bystanders.foreach(p =>
+      org.apache.hadoop.fs.FileUtil.fullyDelete(p.toFile))
   }
 }

@@ -447,9 +447,9 @@ class StoreLockSpec extends SparkSpec {
         .filter(f => f.isDirectory && f.getName.startsWith("lk_probe-"))
         .head.getPath
       // simulate ANOTHER DRIVER mid-build: artifact gone, its lease
-      // held; the winner finishes 400 ms later (artifact restored,
-      // lease released); our loadOrBuild must WAIT then SERVE — the
-      // build lambda must never run
+      // held; the winner finishes 400 ms later (artifact and its
+      // completion marker restored, lease released); our loadOrBuild
+      // must WAIT then SERVE — the build lambda must never run
       val winner = spark.read.parquet(dir).localCheckpoint(true)
       def rm(f: java.io.File): Unit = {
         Option(f.listFiles()).foreach(_.foreach(rm)); f.delete()
@@ -460,6 +460,8 @@ class StoreLockSpec extends SparkSpec {
       val t = new Thread(() => {
         Thread.sleep(400)
         winner.write.mode("overwrite").parquet(dir)
+        val done = new Path(dir, ArtifactStore.DoneMarker)
+        fs(done).create(done, true).close()
         fs(lock).delete(lock, false)
       })
       t.start()
